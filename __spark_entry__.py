@@ -97,8 +97,7 @@ def _q2_parent_child(spark, sf):
     counts) the condition is false and the planner's broadcast stands."""
     orders = _t(spark, sf, "orders")
     li = _t(spark, sf, "lineitem")
-    p = spark.sparkContext.defaultParallelism
-    if li.rdd.getNumPartitions() < p:
+    if _below_cores(li):
         orders = orders.hint("shuffle_hash")
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
@@ -1003,6 +1002,15 @@ def _q38_dedup_clusters(spark, sf):
     return base.unionByName(kept).orderBy("stage", "doc_id")
 
 
+def _below_cores(df: DataFrame) -> bool:
+    """True when ``df`` would run as fewer tasks than the session has
+    cores (the local sf tables are single-row-group parquet files, which
+    Spark reads as ONE task). Counts the partitions of the Dataset's own
+    JVM RDD: one plan analysis, with no Python-side RDD conversion."""
+    sc = df.sparkSession.sparkContext
+    return df._jdf.rdd().getNumPartitions() < sc.defaultParallelism
+
+
 def _spread(df: DataFrame) -> DataFrame:
     """Spread a scan whose parallelism is below the core count (the local
     sf tables are single-row-group parquet files, which Spark reads as ONE
@@ -1011,10 +1019,9 @@ def _spread(df: DataFrame) -> DataFrame:
     read". Scale-adaptive, not a local[32] constant: at production scale
     the input is thousands of splits, the condition is false, and this is
     an exact no-op (no exchange added). Row-identical output either way."""
-    p = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= p:
+    if not _below_cores(df):
         return df
-    return df.repartition(p)
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 
 def _rep_corpus(spark, sf):

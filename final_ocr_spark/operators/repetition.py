@@ -37,10 +37,57 @@ Common-Crawl-scale extraction pipeline needs downstream.
 
 from __future__ import annotations
 
+import re
+from collections import Counter
+from functools import partial
+
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
+
+# Python-side twins of the Column splits below. Java regex ``\s`` is the
+# ASCII set [ \t\n\x0b\f\r] while Python's is Unicode, so every class is
+# spelled out; and Java's non-MULTILINE ``$`` also matches before ONE final
+# line terminator (\r, \n, U+0085, U+2028, U+2029 — only the last three
+# can survive the splits and whitespace classes here), which the lookahead
+# replays.
+_JS = " \t\n\x0b\x0c\r"
+_JAVA_EOL = "\x85\u2028\u2029"
+_TRIM = re.compile(f"^[{_JS}]+|[{_JS}]+(?=[{_JAVA_EOL}]?\\Z)")
+_LINE_SPLIT = re.compile("\r?\n")
+_PARA_SPLIT = re.compile(f"\n[{_JS}]*\n")
+_WS_RUN = re.compile(f"[{_JS}]+")
+
+
+def _py_lines(t: str) -> list[str]:
+    """:func:`norm_lines` in plain Python."""
+    return [l for l in (_TRIM.sub("", l) for l in _LINE_SPLIT.split(t)) if l]
+
+
+def _py_words(t: str) -> list[str]:
+    """:func:`words_of` in plain Python."""
+    return [w for w in _WS_RUN.split(t) if w]
+
+
+def _py_paragraphs(t: str) -> list[str]:
+    """:func:`norm_paragraphs` in plain Python: collapse whitespace runs,
+    then strip ONE leading and ONE trailing space (the anchored alternation
+    can only match one of each), the trailing one also when it precedes a
+    final Java line terminator."""
+    paras = []
+    for p in _PARA_SPLIT.split(t):
+        p = _WS_RUN.sub(" ", p)
+        if p.startswith(" "):
+            p = p[1:]
+        if p.endswith(" "):
+            p = p[:-1]
+        elif p[-2:-1] == " " and p[-1] in _JAVA_EOL:
+            p = p[:-2] + p[-1]
+        if p:
+            paras.append(p)
+    return paras
+
 
 def _zero() -> Column:
     return F.lit(0).cast("long")
@@ -271,7 +318,14 @@ def _bind(col: Column, f) -> Column:
     plain variable reads), and returns exactly ``f(col)`` under 3-valued
     logic: pred TRUE/FALSE/NULL -> TRUE/FALSE/NULL, and a NULL ``col`` is
     carried as a NULL *element* (``array(col)`` is never an empty array),
-    so null propagation matches the unbound form."""
+    so null propagation matches the unbound form.
+
+    That NULL-preserving result depends on
+    ``spark.sql.legacy.followThreeValuedLogicInArrayExists`` (default
+    true). With it false, ``exists`` maps a NULL predicate to FALSE, so a
+    NULL text makes :func:`gopher_repetition_keep` FALSE instead of NULL:
+    the filter verdict is the same (both drop the row), but the value no
+    longer equals the spec form's."""
     return F.exists(F.array(col), f)
 
 
@@ -304,21 +358,27 @@ def gopher_repetition_keep(text_col) -> Column:
     def seg_checks(frac_key: str, char_key: str):
         def checks(seg):
             n = F.size(seg).cast("long")
+            # _frac_le reads its denominator twice: bind the O(n) length
+            # fold so it runs once
             return (
                 _frac_le(n - F.size(F.array_distinct(seg)).cast("long"), n,
                          T[frac_key])
-                & _frac_le(run_stats(seg)["dup_chars"], _sum_lengths(seg),
-                           T[char_key])
+                & _bind(_sum_lengths(seg),
+                        lambda chars: _frac_le(run_stats(seg)["dup_chars"],
+                                               chars, T[char_key]))
             )
 
         return checks
 
     def top_check(grams, n):
-        rs = run_stats(grams)
         # best_run >= 2 gate: a gram occurring once is not repetition
-        # (see repetition_features)
-        top = F.when(rs["best_run"] >= 2, rs["best_chars"]).otherwise(_zero())
-        return _frac_le(top, n_chars, T[f"top{n}gram_char_frac"])
+        # (see repetition_features); the struct is bound so both field
+        # reads share ONE sort+fold
+        def check(rs):
+            top = F.when(rs["best_run"] >= 2, rs["best_chars"]).otherwise(_zero())
+            return _frac_le(top, n_chars, T[f"top{n}gram_char_frac"])
+
+        return _bind(run_stats(grams), check)
 
     def dup_check(grams, n):
         return _frac_le(run_stats(grams)["dup_chars"], n_chars,
@@ -390,6 +450,105 @@ def c4_features(text_col, min_lines: int = 3) -> dict[str, Column]:
     }
 
 
+_C4_END = frozenset('.!?"')
+
+
+def c4_clean(text, min_lines: int = 3) -> tuple[bool | None, str | None]:
+    """``(doc_keep, clean_text)`` of :func:`c4_features` for one document
+    in plain Python — bit-equal to the Column form (pinned by an
+    adversarial differential in tests/test_repetition.py): lines split and
+    trimmed with Java's ASCII ``\\s`` (:func:`_py_lines`), the last
+    character is the last code point (``substring(l, -1, 1)``),
+    ``javascript`` / ``lorem ipsum`` match case-insensitively and ``{``
+    literally. NULL text gives a NULL clean_text and the Column form's
+    doc_keep: ``size(NULL)`` is -1 (ANSI off, as ``get_spark`` pins it), so
+    ``n_kept >= min_lines`` is FALSE, and FALSE AND NULL is FALSE, for any
+    ``min_lines >= 0``; either way a filter drops the doc."""
+    if not isinstance(text, str):
+        return (False if min_lines >= 0 else None), None
+    kept = [
+        l for l in _py_lines(text)
+        if l[-1] in _C4_END
+        and len(_py_words(l)) >= 5
+        and "javascript" not in l.lower()
+    ]
+    keep = (
+        len(kept) >= min_lines
+        and "{" not in text
+        and "lorem ipsum" not in text.lower()
+    )
+    return keep, "\n".join(kept)
+
+
+def _dup_chars(cnt: Counter) -> int:
+    return sum(c * len(v) for v, c in cnt.items() if c >= 2)
+
+
+def _gram_counts(words: list[str], n: int) -> Counter:
+    # n-grams counted as zip tuples (C speed, no string build)
+    return Counter(zip(*(words[j:] for j in range(n))))
+
+
+def _top_gram_chars(words: list[str], n: int) -> int:
+    """top{n}gram_chars: 0 unless the most frequent gram occurs >= 2 times.
+    Ties break toward the smallest JOINED gram: tuple order can differ from
+    joined-string order when a word contains chars < U+0020, so the join
+    materializes, for the tied winners only."""
+    g = _gram_counts(words, n)
+    best_c = max(g.values(), default=0)
+    if best_c < 2:
+        return 0
+    return best_c * len(min(" ".join(v) for v, c in g.items() if c == best_c))
+
+
+def _dup_gram_chars(words: list[str], n: int) -> int:
+    return sum(
+        c * (sum(map(len, v)) + n - 1)
+        for v, c in _gram_counts(words, n).items()
+        if c >= 2
+    )
+
+
+def repetition_features_py(
+    t,
+    top_ns: tuple[int, ...] = (2, 3, 4),
+    dup_ns: tuple[int, ...] = (5, 6, 7, 8, 9, 10),
+) -> dict:
+    """:func:`repetition_features` of one document in plain Python — the
+    kernel :func:`repetition_features_udf` wraps. NULL text replays the
+    Column forms' pinned null propagation: array counts are -1
+    (``size(NULL)``), aggregate folds are NULL, and the top-gram counts are
+    0 (their ``when(NULL, ...).otherwise(0)`` falls through)."""
+    if not isinstance(t, str):
+        return {
+            "n_chars": None, "n_words": -1, "n_lines": -1,
+            "n_distinct_lines": -1, "dup_line_chars": None,
+            "line_chars": None, "n_paras": -1, "n_distinct_paras": -1,
+            "dup_para_chars": None, "para_chars": None,
+            **{f"top{n}gram_chars": 0 for n in top_ns},
+            **{f"dup{n}gram_chars": None for n in dup_ns},
+        }
+    lines, paras, words = _py_lines(t), _py_paragraphs(t), _py_words(t)
+    lc, pc = Counter(lines), Counter(paras)
+    out = {
+        "n_chars": len(t),
+        "n_words": len(words),
+        "n_lines": len(lines),
+        "n_distinct_lines": len(lc),
+        "dup_line_chars": _dup_chars(lc),
+        "line_chars": sum(map(len, lines)),
+        "n_paras": len(paras),
+        "n_distinct_paras": len(pc),
+        "dup_para_chars": _dup_chars(pc),
+        "para_chars": sum(map(len, paras)),
+    }
+    for n in top_ns:
+        out[f"top{n}gram_chars"] = _top_gram_chars(words, n)
+    for n in dup_ns:
+        out[f"dup{n}gram_chars"] = _dup_gram_chars(words, n)
+    return out
+
+
 def repetition_features_udf(
     top_ns: tuple[int, ...] = (2, 3, 4),
     dup_ns: tuple[int, ...] = (5, 6, 7, 8, 9, 10),
@@ -409,20 +568,17 @@ def repetition_features_udf(
       the UDF collapses it to one ArrowEvalPython node.
 
     Returns a deferred pandas_udf producing ONE struct column with exactly
-    the :func:`repetition_features` keys (all long). Bit-equality with the
-    Column form is pinned by tests/test_repetition.py's adversarial
-    differential (same corpus as the keep-gate twin).
+    the :func:`repetition_features` keys (all long), computed by
+    :func:`repetition_features_py`. Bit-equality with the Column form is
+    pinned by tests/test_repetition.py's adversarial differential (same
+    corpus as the keep-gate twin).
 
-    Exactness contract (mirrors :func:`gopher_repetition_keep_udf`):
-    Java ``\\s`` is ASCII-only, spelled out; paragraph normalization
-    replays the Column order (collapse runs, strip ONE leading/trailing
-    space); a top-n-gram occurring once contributes 0 (``best_run >= 2``);
-    ties break toward the lexicographically smallest gram (Python str
-    order == Spark's UTF-8 binary order). NULL text replays the Column
-    forms' exact (inconsistent-looking, but pinned) null propagation:
-    array counts are -1 (``size(NULL)``), aggregate folds are NULL, and
-    the top-gram counts are 0 (their ``when(NULL, ...).otherwise(0)``
-    falls through) — verified against Spark by the differential test.
+    Exactness contract (mirrors :func:`gopher_keep`): Java ``\\s`` is
+    ASCII-only, spelled out; paragraph normalization replays the Column
+    order (collapse runs, strip ONE leading/trailing space); a top-n-gram
+    occurring once contributes 0 (``best_run >= 2``); ties break toward the
+    lexicographically smallest gram (Python str order == Spark's UTF-8
+    binary order).
     """
     fields = ["n_chars", "n_words", "n_lines", "n_distinct_lines",
               "dup_line_chars", "line_chars", "n_paras", "n_distinct_paras",
@@ -430,84 +586,7 @@ def repetition_features_udf(
     fields += [f"top{n}gram_chars" for n in top_ns]
     fields += [f"dup{n}gram_chars" for n in dup_ns]
     schema = ", ".join(f"{f}: long" for f in fields)
-
-    def _factory():
-        import re
-        from collections import Counter
-
-        js = " \t\n\x0b\x0c\r"  # Java \s
-        trim_re = re.compile(f"^[{js}]+|[{js}]+$")
-        line_split = re.compile("\r?\n")
-        para_split = re.compile(f"\n[{js}]*\n")
-        ws_run = re.compile(f"[{js}]+")
-
-        def dup_chars(cnt: Counter) -> int:
-            return sum(c * len(v) for v, c in cnt.items() if c >= 2)
-
-        null_row = {
-            "n_chars": None, "n_words": -1, "n_lines": -1,
-            "n_distinct_lines": -1, "dup_line_chars": None,
-            "line_chars": None, "n_paras": -1, "n_distinct_paras": -1,
-            "dup_para_chars": None, "para_chars": None,
-            **{f"top{n}gram_chars": 0 for n in top_ns},
-            **{f"dup{n}gram_chars": None for n in dup_ns},
-        }
-
-        def one(t):
-            if not isinstance(t, str):
-                return dict(null_row)
-            lines = [trim_re.sub("", l) for l in line_split.split(t)]
-            lines = [l for l in lines if l]
-            paras = []
-            for p in para_split.split(t):
-                p = ws_run.sub(" ", p)
-                if p.startswith(" "):
-                    p = p[1:]
-                if p.endswith(" "):
-                    p = p[:-1]
-                if p:
-                    paras.append(p)
-            words = [w for w in ws_run.split(t) if w]
-            lc, pc = Counter(lines), Counter(paras)
-            out = {
-                "n_chars": len(t),
-                "n_words": len(words),
-                "n_lines": len(lines),
-                "n_distinct_lines": len(lc),
-                "dup_line_chars": dup_chars(lc),
-                "line_chars": sum(map(len, lines)),
-                "n_paras": len(paras),
-                "n_distinct_paras": len(pc),
-                "dup_para_chars": dup_chars(pc),
-                "para_chars": sum(map(len, paras)),
-            }
-            # n-grams counted as zip-tuples (C-speed, no string build);
-            # " ".join only materializes for tied top-gram winners — the
-            # tie-break must follow JOINED-string order, and tuple order
-            # can differ from it when a word contains chars < U+0020
-            for n in top_ns:
-                g = Counter(zip(*(words[j:] for j in range(n))))
-                top = 0
-                if g:
-                    best_c = max(g.values())
-                    if best_c >= 2:
-                        best = min(
-                            " ".join(v) for v, c in g.items() if c == best_c
-                        )
-                        top = best_c * len(best)
-                out[f"top{n}gram_chars"] = top
-            for n in dup_ns:
-                g = Counter(zip(*(words[j:] for j in range(n))))
-                out[f"dup{n}gram_chars"] = sum(
-                    c * (sum(map(len, v)) + n - 1)
-                    for v, c in g.items()
-                    if c >= 2
-                )
-            return out
-
-        return one
-
-    one = _factory()
+    one = partial(repetition_features_py, top_ns=top_ns, dup_ns=dup_ns)
 
     @pandas_udf(schema)
     def feats(texts: pd.Series) -> pd.DataFrame:
@@ -516,22 +595,26 @@ def repetition_features_udf(
     return feats
 
 
-def gopher_repetition_keep_udf(
+def _frac_le_py(num: int, den: int, pct: int) -> bool:
+    return den <= 0 or num * 100 <= den * pct
+
+
+def gopher_keep(
+    t,
     top_ns: tuple[int, ...] = (2, 3, 4),
     dup_ns: tuple[int, ...] = (5, 6, 7, 8, 9, 10),
 ):
-    """Arrow-batched twin of :func:`gopher_repetition_keep` — same verdict,
-    computed in plain Python per batch instead of nine interpreted
-    higher-order folds per row (the Column form measures ~6-7 core-ms on a
-    ~500-word doc; this path is the simhash-popcount playbook applied to
-    the densest scan-local gate). Bit-equality is pinned by a differential
-    test over adversarial whitespace/repetition corpora.
+    """:func:`gopher_repetition_keep` of one document in plain Python — the
+    kernel that :func:`gopher_repetition_keep_udf` and the corpus gate
+    cascade (operators/gates.py) both call. Checks run cheapest first and
+    return at the first failure; NULL text returns None, which a filter
+    drops exactly like the Column form's NULL verdict.
 
-    Semantics notes that make the twin EXACT, not approximate:
+    Semantics notes that make the kernel EXACT, not approximate:
 
     * Java regex ``\\s`` is ASCII-only (``[ \\t\\n\\x0b\\f\\r]``) while
-      Python's ``\\s`` is Unicode — every class below spells the Java set
-      out explicitly, or a NBSP-separated token stream would tokenize
+      Python's ``\\s`` is Unicode — every class spells the Java set out
+      explicitly, or a NBSP-separated token stream would tokenize
       differently in the two paths;
     * the paragraph normalization replays the Column order exactly
       (collapse ``\\s+`` to one space, then strip ONE leading/trailing
@@ -540,86 +623,53 @@ def gopher_repetition_keep_udf(
     * a top-n-gram occurring once is not repetition (the ``best_run >= 2``
       gate), ties break toward the lexicographically smallest gram, and
       the integer threshold rule (``den <= 0`` vacuously true, ``num*100
-      <= den*pct``) is copied verbatim;
-    * null text returns null, so ``filter`` drops it in both forms.
+      <= den*pct``) is copied verbatim."""
+    if not isinstance(t, str):
+        return None
+    T = GOPHER_THRESHOLDS_PCT
+    lines = _py_lines(t)
+    lc = Counter(lines)
+    if not _frac_le_py(len(lines) - len(lc), len(lines), T["dup_line_frac"]):
+        return False
+    paras = _py_paragraphs(t)
+    pc = Counter(paras)
+    if not _frac_le_py(len(paras) - len(pc), len(paras), T["dup_para_frac"]):
+        return False
+    if not _frac_le_py(_dup_chars(lc), sum(map(len, lines)),
+                       T["dup_line_char_frac"]):
+        return False
+    if not _frac_le_py(_dup_chars(pc), sum(map(len, paras)),
+                       T["dup_para_char_frac"]):
+        return False
+    words, n_chars = _py_words(t), len(t)
+    for n in top_ns:
+        if not _frac_le_py(_top_gram_chars(words, n), n_chars,
+                           T[f"top{n}gram_char_frac"]):
+            return False
+    for n in sorted(dup_ns):
+        dup = _dup_gram_chars(words, n)
+        if not _frac_le_py(dup, n_chars, T[f"dup{n}gram_char_frac"]):
+            return False
+        if dup == 0:
+            # no n-gram occurs twice, so no longer gram does either (its
+            # first n words would): every later check reads 0 and passes
+            return True
+    return True
+
+
+def gopher_repetition_keep_udf(
+    top_ns: tuple[int, ...] = (2, 3, 4),
+    dup_ns: tuple[int, ...] = (5, 6, 7, 8, 9, 10),
+):
+    """Arrow-batched twin of :func:`gopher_repetition_keep` — same verdict,
+    computed by :func:`gopher_keep` per batch instead of nine interpreted
+    higher-order folds per row (the Column form measures ~6-7 core-ms on a
+    ~500-word doc; this path is the simhash-popcount playbook applied to
+    the densest scan-local gate). Bit-equality is pinned by a differential
+    test over adversarial whitespace/repetition corpora.
 
     Deferred factory (module-level ``@pandas_udf`` needs a session)."""
-
-    def _factory():
-        import re
-        from collections import Counter
-
-        js = " \t\n\x0b\x0c\r"  # Java \s
-        trim_re = re.compile(f"^[{js}]+|[{js}]+$")
-        line_split = re.compile("\r?\n")
-        para_split = re.compile(f"\n[{js}]*\n")
-        ws_run = re.compile(f"[{js}]+")
-        thresholds = dict(GOPHER_THRESHOLDS_PCT)
-
-        def frac_le(num: int, den: int, pct: int) -> bool:
-            return den <= 0 or num * 100 <= den * pct
-
-        def dup_chars(cnt: Counter) -> int:
-            return sum(c * len(v) for v, c in cnt.items() if c >= 2)
-
-        def one(t):
-            if not isinstance(t, str):
-                return None
-            lines = [trim_re.sub("", l) for l in line_split.split(t)]
-            lines = [l for l in lines if l]
-            paras = []
-            for p in para_split.split(t):
-                p = ws_run.sub(" ", p)
-                if p.startswith(" "):
-                    p = p[1:]
-                if p.endswith(" "):
-                    p = p[:-1]
-                if p:
-                    paras.append(p)
-            words = [w for w in ws_run.split(t) if w]
-            n_chars = len(t)
-            lc, pc = Counter(lines), Counter(paras)
-            if not frac_le(len(lines) - len(lc), len(lines),
-                           thresholds["dup_line_frac"]):
-                return False
-            if not frac_le(len(paras) - len(pc), len(paras),
-                           thresholds["dup_para_frac"]):
-                return False
-            if not frac_le(dup_chars(lc), sum(map(len, lines)),
-                           thresholds["dup_line_char_frac"]):
-                return False
-            if not frac_le(dup_chars(pc), sum(map(len, paras)),
-                           thresholds["dup_para_char_frac"]):
-                return False
-            # zip-tuple gram counting; joined strings only for tied top
-            # winners (see repetition_features_udf's tie-break note)
-            for n in top_ns:
-                g = Counter(zip(*(words[j:] for j in range(n))))
-                top = 0
-                if g:
-                    best_c = max(g.values())
-                    if best_c >= 2:
-                        best = min(
-                            " ".join(v) for v, c in g.items() if c == best_c
-                        )
-                        top = best_c * len(best)
-                if not frac_le(top, n_chars, thresholds[f"top{n}gram_char_frac"]):
-                    return False
-            for n in dup_ns:
-                g = Counter(zip(*(words[j:] for j in range(n))))
-                dup = sum(
-                    c * (sum(map(len, v)) + n - 1)
-                    for v, c in g.items()
-                    if c >= 2
-                )
-                if not frac_le(dup, n_chars,
-                               thresholds[f"dup{n}gram_char_frac"]):
-                    return False
-            return True
-
-        return one
-
-    one = _factory()
+    one = partial(gopher_keep, top_ns=top_ns, dup_ns=dup_ns)
 
     @pandas_udf("boolean")
     def keep(texts: pd.Series) -> pd.Series:

@@ -6,6 +6,8 @@ in an Arrow-batched pandas UDF.
 
 from __future__ import annotations
 
+import re
+
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -81,19 +83,26 @@ def quality_score(text_col) -> Column:
     return F.round(total * F.lit(100.0 / len(checks)), 1)
 
 
-def quality_score_udf():
-    """Arrow-batched twin of :func:`quality_score` — same verdict, computed
-    in plain Python per batch instead of four full-text regex passes plus a
-    per-token interpreted ``isin`` fold (the gopher-gate playbook applied
-    to the second-densest scan-local gate; measured ~7× on the bench
-    corpus). Bit-equality is pinned by a differential test over
-    adversarial whitespace/unicode corpora (tests/test_text_stats.py).
+_JS_WS_RUN = re.compile("[ \t\n\x0b\x0c\r]+")  # Java \s
+# char-class counts via C-level str.translate deletion (one pass per class)
+# instead of a per-character Python loop — the three classes are disjoint,
+# so delete-and-diff equals an elif chain
+_DEL_PUNCT = str.maketrans("", "", "!\"#$%&'()*+,-./:;<=>?@[\\]^_`{|}~")
+_DEL_UPPER = str.maketrans("", "", "ABCDEFGHIJKLMNOPQRSTUVWXYZ")
+_DEL_DIGIT = str.maketrans("", "", "0123456789")
+_STOPSET = frozenset(_STOPWORDS)
 
-    Semantics notes that make the twin EXACT, not approximate:
+
+def quality_score_py(t) -> float:
+    """:func:`quality_score` of one document in plain Python — the kernel
+    that :func:`quality_score_udf` and the corpus gate cascade
+    (operators/gates.py) both call.
+
+    Semantics notes that make the kernel EXACT, not approximate:
 
     * ``F.trim`` strips SPACE (U+0020) only; Java ``\\s`` is the ASCII set
       ``[ \\t\\n\\x0b\\f\\r]`` (NBSP et al. are token characters in both
-      forms) — both spelled out below;
+      forms) — both spelled out here;
     * the char-class counts are ASCII-exact: punctuation is the three
       ranges ``!-/ :-@ [-` {-~``, upper is ``A-Z``, digit is ``0-9`` —
       Unicode uppercase/digits do NOT count, same as the Column form;
@@ -101,56 +110,48 @@ def quality_score_udf():
     * a NULL text scores 12.5 in the Column form — ``size(null)`` is -1,
       so exactly one check (``n_tokens <= 100000``) passes while every
       null-propagating comparison falls to its ``otherwise(0)`` — and the
-      twin pins that artifact rather than inventing a prettier answer;
+      kernel pins that artifact rather than inventing a prettier answer;
     * the score grid is multiples of 12.5 (exactly representable), so the
-      trailing round(·, 1) can never tie-break differently.
+      trailing round(·, 1) can never tie-break differently."""
+    if not isinstance(t, str):
+        return 12.5  # the Column form's size(null) = -1 artifact
+    toks = [w for w in _JS_WS_RUN.split(t.strip(" ")) if w]
+    n_tok, n_chars = len(toks), len(t)
+    n_stop = sum(1 for w in toks if w.lower() in _STOPSET)
+    n_punct = n_chars - len(t.translate(_DEL_PUNCT))
+    n_upper = n_chars - len(t.translate(_DEL_UPPER))
+    n_digit = n_chars - len(t.translate(_DEL_DIGIT))
+    st = max(n_tok, 1)
+    sc = max(n_chars, 1)
+    mean_wl = (n_chars - n_tok + 1) / st
+    checks = (
+        n_tok >= 20,
+        n_tok <= 100000,
+        mean_wl >= 2.0,
+        mean_wl <= 12.0,
+        n_stop / st >= 0.01,
+        n_punct / sc <= 0.30,
+        n_upper / sc <= 0.30,
+        n_digit / sc <= 0.30,
+    )
+    return round(sum(checks) * 12.5, 1)
+
+
+def quality_score_udf():
+    """Arrow-batched twin of :func:`quality_score` — same verdict, computed
+    by :func:`quality_score_py` per batch instead of four full-text regex
+    passes plus a per-token interpreted ``isin`` fold (the gopher-gate
+    playbook applied to the second-densest scan-local gate; measured ~7× on
+    the bench corpus). Bit-equality is pinned by a differential test over
+    adversarial whitespace/unicode corpora (tests/test_text_stats.py).
 
     Deferred factory (module-level ``@pandas_udf`` needs a session)."""
 
-    def _factory():
-        import re
+    @pandas_udf("double")
+    def score(texts: pd.Series) -> pd.Series:
+        return texts.map(quality_score_py)
 
-        js = " \t\n\x0b\x0c\r"  # Java \s
-        ws_run = re.compile(f"[{js}]+")
-        # char-class counts via C-level str.translate deletion (one pass
-        # per class) instead of a per-character Python loop — the three
-        # classes are disjoint, so delete-and-diff equals the elif chain
-        del_punct = str.maketrans("", "", "!\"#$%&'()*+,-./:;<=>?@[\\]^_`{|}~")
-        del_upper = str.maketrans("", "", "ABCDEFGHIJKLMNOPQRSTUVWXYZ")
-        del_digit = str.maketrans("", "", "0123456789")
-        stop = set(_STOPWORDS)
-
-        def one(t):
-            if not isinstance(t, str):
-                return 12.5  # the Column form's size(null) = -1 artifact
-            toks = [w for w in ws_run.split(t.strip(" ")) if w]
-            n_tok, n_chars = len(toks), len(t)
-            n_stop = sum(1 for w in toks if w.lower() in stop)
-            n_punct = n_chars - len(t.translate(del_punct))
-            n_upper = n_chars - len(t.translate(del_upper))
-            n_digit = n_chars - len(t.translate(del_digit))
-            st = max(n_tok, 1)
-            sc = max(n_chars, 1)
-            mean_wl = (n_chars - n_tok + 1) / st
-            checks = (
-                n_tok >= 20,
-                n_tok <= 100000,
-                mean_wl >= 2.0,
-                mean_wl <= 12.0,
-                n_stop / st >= 0.01,
-                n_punct / sc <= 0.30,
-                n_upper / sc <= 0.30,
-                n_digit / sc <= 0.30,
-            )
-            return round(sum(checks) * 12.5, 1)
-
-        @pandas_udf("double")
-        def score(texts: pd.Series) -> pd.Series:
-            return texts.map(one)
-
-        return score
-
-    return _factory()
+    return score
 
 
 def detect_lang_udf():

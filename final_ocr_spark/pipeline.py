@@ -13,14 +13,21 @@ to a training-ready corpus, composed from the engine's tested operators.
       1. extract          mapInPandas main-content extraction, per-row
                           quarantine, latest-wins url dedup on the
                           EXTRACTED rows (~4× smaller than html)
-      1c. language gate   optional lang_allow filter — declared lang column
-                          for free, or re-detected from the extracted text
-                          (one Arrow batch stage) with lang_detect=True
-      1d. C4 line clean   optional Raffel et al. 2020 §2.2 line rules +
-                          doc gates (lorem-ipsum / '{' / min kept lines),
-                          rewriting text before any scoring or hashing
-      2. quality gate     Gopher repetition checks + quality score —
-                          scan-local Column exprs, zero extra shuffle
+      1c-2. gate layer    one short-circuiting mapInArrow pass
+                          (operators/gates.py), per doc in this order:
+                          1c. language gate — optional lang_allow, on the
+                              declared lang column (a Column filter ahead
+                              of the pass) or re-detected from the
+                              extracted text with lang_detect=True
+                          1d. C4 line clean — optional Raffel et al. 2020
+                              §2.2 line rules + doc gates (lorem-ipsum /
+                              '{' / min kept lines), rewriting text before
+                              any scoring or hashing
+                          2.  quality gate — composite quality score
+                          2'. Gopher gate — repetition checks
+                          stopping at the first failing gate; the Column
+                          forms (quality_arrow/gopher_arrow=False) run as
+                          a JVM filter chain instead
       2a. wordlist gate   optional flagged-token-ratio blocklist filter
                           (caller-supplied policy list) — scan-local
       2a'. compression    optional zlib-ratio band gate (over-compressible
@@ -65,8 +72,9 @@ Each stage is independently oracle-checked through the driver contract
 composition itself is pinned by tests/test_pipeline.py on a corpus with
 planted duplicates, near-duplicates, spam, PII, and a hot host.
 
-Scale notes: stages 1-3 fuse into the extraction scan's output projection
-(one python stage + Column exprs); 4 shuffles hashes, not text; 5 shuffles
+Scale notes: stages 1-3 stay scan-local — after the extraction's url
+shuffle, the gate layer is one Python map and the rest Column exprs — and
+no gate adds a shuffle; 4 shuffles hashes, not text; 5 shuffles
 slim (key, bucket) rows only (see operators/dedup.py); 6-7 are one salted
 window and a pushed-down filter. Nothing here collects to the driver.
 
@@ -89,8 +97,8 @@ from final_ocr_spark.operators.dedup import (
     ngram_jaccard_pairs,
 )
 from final_ocr_spark.operators.extract_pages import extract_pages
+from final_ocr_spark.operators.gates import gate_cascade, staged_gates
 from final_ocr_spark.operators.pii import redact_pii
-from final_ocr_spark.operators.repetition import gopher_repetition_keep
 from final_ocr_spark.operators.sampling import deterministic_sample, stratified_cap
 from final_ocr_spark.operators.text_stats import quality_score
 from final_ocr_spark.streaming.stateful import with_host
@@ -222,77 +230,31 @@ def corpus_pipeline(
 
         docs = docs.withColumn("text", repair_mojibake("text"))
 
-    # 1c. language gate (optional): keep only lang_allow languages. With
-    # lang_detect=True the verdict comes from the n-gram heuristic over the
-    # EXTRACTED text (crawl-declared lang headers are wrong often enough
-    # that C4/CCNet/FineWeb all re-detect) and overwrites the lang column;
-    # otherwise the existing column gates for free inside the scan. Runs
-    # before the text-rewrite stages so every downstream gate and every
-    # hash sees only in-scope docs.
-    # lang_detect stands alone: with no lang_allow it still re-detects and
-    # overwrites the lang column (the output corpus carries corrected
-    # labels) — silently ignoring the flag would change corpus composition
-    # vs the caller's intent without a trace (review-caught).
-    if lang_detect:
-        from final_ocr_spark.operators.text_stats import detect_lang_udf
-
-        docs = docs.withColumn("lang", detect_lang_udf()(F.col("text")))
-    if lang_allow is not None:
-        allow = sorted({str(lang) for lang in lang_allow})
-        if not allow:
-            raise ValueError("lang_allow must be non-empty when set")
-        docs = docs.filter(F.col("lang").isin(*allow))
-
-    # 1d. C4 line cleaning (optional, Raffel et al. 2020 §2.2): drop lines
-    # lacking terminal punctuation / under 5 words / mentioning
-    # 'javascript', then the doc gates (>= c4_min_lines kept lines, no
-    # 'lorem ipsum', no '{'). Rewrites text BEFORE quality scoring and
-    # every hashing stage. Both the verdict and the rewrite derive from the
-    # PRE-rewrite text (one withColumns — doc_keep on cleaned text would
-    # double-apply the line rules). Scan-local Column work.
-    # Assumes line-structured text: the HTML extractor emits one line per
-    # kept block, so html corpora work as published; text-PASSTHROUGH rows
-    # collapse newlines at extraction (pinned byte-identity behavior), so a
-    # pre-collapsed corpus sees ONE line per doc and needs c4_min_lines=1.
-    if c4_line_clean:
-        from final_ocr_spark.operators.repetition import c4_features
-
-        feats = c4_features(F.col("text"), min_lines=c4_min_lines)
-        docs = (
-            docs.withColumns(
-                {"_c4_keep": feats["doc_keep"], "text": feats["clean_text"]}
-            )
-            .filter(F.col("_c4_keep"))
-            .drop("_c4_keep")
-        )
-
-    # 2. quality gate (scan-local). quality_arrow (default) scores with the
-    # bit-equal Arrow twin — the Column form burns four full-text regex
-    # passes plus a per-token interpreted isin fold (~30 core-ms/doc
-    # measured; quality_score_udf's docstring has the semantics contract)
-    if quality_arrow:
-        from final_ocr_spark.operators.text_stats import quality_score_udf
-
-        docs = docs.withColumn("quality_score", quality_score_udf()(F.col("text")))
+    # 1c-2. the gate layer (operators/gates.py): language gate → C4 line
+    # clean → quality gate → Gopher gate. lang_detect re-detects from the
+    # EXTRACTED text and overwrites lang even with no lang_allow (crawl-
+    # declared lang headers are wrong often enough that C4/CCNet/FineWeb
+    # all re-detect); the C4 clean rewrites text before any scoring or
+    # hashing. With the Arrow twins (the defaults) the gates run as one
+    # short-circuiting mapInArrow pass; a Column form (quality_arrow=False
+    # or gopher_arrow=False) keeps the JVM filter chain.
+    # The C4 line rules assume line-structured text: the HTML extractor
+    # emits one line per kept block, so html corpora work as published;
+    # text-PASSTHROUGH rows collapse newlines at extraction (pinned
+    # byte-identity behavior), so a pre-collapsed corpus sees ONE line per
+    # doc and needs c4_min_lines=1.
+    gate_kw = dict(
+        lang_detect=lang_detect, lang_allow=lang_allow,
+        c4_line_clean=c4_line_clean, c4_min_lines=c4_min_lines,
+        min_quality=min_quality, gopher=gopher,
+    )
+    if quality_arrow and (gopher_arrow or not gopher):
+        docs = gate_cascade(docs, **gate_kw)
     else:
-        docs = docs.withColumn("quality_score", quality_score(F.col("text")))
-    docs = docs.filter(F.col("quality_score") >= F.lit(min_quality))
-    if gopher:
-        if gopher_arrow:
-            # the DEFAULT: Arrow-batched twin of the Column form
-            # (bit-equality pinned by tests/test_repetition.py's
-            # adversarial differential) — same verdicts, 5.6× less CPU
-            # measured on the nine-fold dup-gram family (8.2 s → 1.5 s
-            # warm, 50k docs, local[32]); at 100 TB the default must be
-            # the measured-fast path. gopher_arrow=False keeps the
-            # pure-JVM Column gate for callers who refuse Python stages.
-            from final_ocr_spark.operators.repetition import (
-                gopher_repetition_keep_udf,
-            )
-
-            docs = docs.filter(gopher_repetition_keep_udf()(F.col("text")))
-        else:
-            docs = docs.filter(gopher_repetition_keep(F.col("text")))
+        docs = staged_gates(
+            docs, quality_arrow=quality_arrow, gopher_arrow=gopher_arrow,
+            **gate_kw,
+        )
 
     # 2a. wordlist gate (optional, scan-local): drop docs whose
     # flagged-token ratio exceeds flagged_max_ratio — the C4 "bad words" /
@@ -310,8 +272,12 @@ def corpus_pipeline(
     # 2a'. compression band gate (optional): zlib ratio of a bounded text
     # head must land in [lo, hi] — catches the repetitive/template tail
     # (over-compressible) and the noise/encoded tail (incompressible) that
-    # the lexical features above can't see. Arrow batch stage, no shuffle;
-    # runs after the Column gates so the UDF only sees surviving rows.
+    # the lexical features above can't see. Arrow batch stage, no shuffle.
+    # The UDF only scores rows that survived every gate above because the
+    # gate layer's mapInArrow is opaque to Catalyst. Behind the staged
+    # chain (quality_arrow=False with the Gopher UDF) Catalyst evaluates it
+    # in the same ArrowEvalPython node as the Gopher UDF, below their
+    # merged filter, so it also scores rows the Gopher gate drops.
     if compression_band is not None:
         from final_ocr_spark.operators.text_stats import compression_band_gate
 

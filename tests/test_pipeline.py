@@ -662,3 +662,134 @@ def test_corpus_pipeline_gopher_arrow_same_verdicts(spark):
     assert sorted(r["url"] for r in base.collect()) == \
            sorted(r["url"] for r in fast.collect())
     assert all("spam" not in r["url"] for r in fast.collect())
+
+
+# the gate layer's corpus_pipeline kwargs (stages 1c-2)
+_GATE_KW = ("lang_detect", "lang_allow", "c4_line_clean", "c4_min_lines",
+            "min_quality", "gopher")
+_LINES = [
+    "The harbor committee approved the dredging budget after a long session.",
+    "Residents raised several concerns about the noise schedule at the hearing.",
+    "A clear majority of the members passed the final proposal that evening!",
+    "short line.",
+    "no terminal punctuation in this line at all",
+    "Please enable JavaScript in the browser to see the page.",
+]
+
+
+def _gate_corpus():
+    """Docs that fail at every gate of the cascade, and docs that pass."""
+    import random
+
+    rng = random.Random(11)
+    texts = [
+        "\n".join(_LINES[:3]),
+        "\n".join(_LINES),
+        _LINES[0],
+        "Der Ausschuss hat das Budget nach einer langen Sitzung genehmigt "
+        "und die Mitglieder sind mit dem Ergebnis sehr zufrieden.",
+        "buy now " * 60,
+        "\n".join([_LINES[0]] * 6),
+        "\n".join(_LINES[:3]) + "\nLorem ipsum dolor sit amet, consectetur.",
+        "\n".join(_LINES[:3]) + "\nconfig {a: 1}",
+        GOOD,
+        "",
+        None,
+    ]
+    for _ in range(60):
+        texts.append("\n".join(
+            rng.choice(_LINES + [GOOD, "buy now buy now buy now."])
+            for _ in range(rng.randint(1, 6))
+        ))
+    langs = ["en", "en", None, "de"] + ["en"] * (len(texts) - 4)
+    return [
+        (f"https://h{i % 3}.example.com/{i}", TS, t, lang, f"h{i % 3}.example.com")
+        for i, (t, lang) in enumerate(zip(texts, langs))
+    ]
+
+
+def test_gate_cascade_equals_staged_chain(spark):
+    """The one-pass cascade must return exactly what today's staged chain
+    of Arrow-twin UDFs and Column filters returns — rows, values, column
+    order and types — under the pipeline defaults and the fineweb, c4 and
+    gopher presets' gate settings."""
+    import inspect
+
+    from final_ocr_spark.operators.gates import gate_cascade, staged_gates
+    from final_ocr_spark.presets import preset_kwargs
+
+    docs = spark.createDataFrame(
+        _gate_corpus(),
+        "url string, warc_ts timestamp, text string, lang string, host string",
+    )
+    defaults = {k: p.default for k, p in
+                inspect.signature(corpus_pipeline).parameters.items()
+                if k in _GATE_KW}
+    for preset in (None, "fineweb", "c4", "gopher"):
+        kw = dict(defaults)
+        if preset:
+            kw.update({k: v for k, v in preset_kwargs(preset).items()
+                       if k in _GATE_KW})
+        got = gate_cascade(docs, **kw)
+        want = staged_gates(docs, quality_arrow=True, gopher_arrow=True, **kw)
+        assert got.schema == want.schema, preset
+        got_rows, want_rows = sorted(got.collect()), sorted(want.collect())
+        assert got_rows == want_rows, preset
+        assert 0 < len(got_rows) < docs.count(), preset
+
+
+def test_gate_cascade_runs_each_kernel_once_per_doc_reaching_it():
+    """Driven with counting kernels, the cascade's batch function calls
+    each gate kernel exactly once per doc that reaches that gate, and
+    never for a doc an earlier gate dropped."""
+    from collections import Counter
+
+    import pyarrow as pa
+
+    from final_ocr_spark.operators.gates import KERNELS, cascade_batches
+
+    names = ("detect_lang", "c4_clean", "quality", "gopher_keep")
+    calls: Counter = Counter()
+
+    def counting(name, fn):
+        def wrapped(*args):
+            calls[name] += 1
+            return fn(*args)
+        return wrapped
+
+    kernels = tuple(counting(n, f) for n, f in zip(names, KERNELS))
+    texts = [t for _, _, t, _, _ in _gate_corpus() if t is not None]
+    batch = pa.RecordBatch.from_pydict(
+        {"url": [str(i) for i in range(len(texts))], "text": texts,
+         "lang": ["xx"] * len(texts)}
+    )
+    out = pa.Table.from_batches(list(cascade_batches(
+        [batch.slice(0, 7), batch.slice(7)], lang_detect=True,
+        allow=frozenset({"en"}), c4_min_lines=1, min_quality=90.0,
+        gopher=True, kernels=kernels,
+    )))
+
+    detect, c4, quality, keep = KERNELS
+    reach: Counter = Counter()
+    survivors = []
+    for t in texts:
+        reach["detect_lang"] += 1
+        if detect(t) != "en":
+            continue
+        reach["c4_clean"] += 1
+        ok, clean = c4(t, 1)
+        if not ok:
+            continue
+        reach["quality"] += 1
+        if quality(clean) < 90.0:  # a one-line doc scores 87.5
+            continue
+        reach["gopher_keep"] += 1
+        if keep(clean):
+            survivors.append(clean)
+    assert calls == reach
+    # every gate drops something, so each count is a real short-circuit
+    counts = [reach[n] for n in names] + [len(survivors)]
+    assert counts == sorted(counts, reverse=True) and len(set(counts)) == 5
+    assert out.column("text").to_pylist() == survivors
+    assert set(out.column("lang").to_pylist()) == {"en"}
+    assert out.schema.names == ["url", "text", "lang", "quality_score"]

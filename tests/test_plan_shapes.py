@@ -226,3 +226,35 @@ def test_pack_chunks_slim_prefix_and_bounded_data_exchanges(spark):
     for line in plan.splitlines():
         if "Exchange rangepartitioning" in line:
             assert "_ids" not in line
+
+
+def test_fineweb_gates_are_one_python_map(spark, monkeypatch):
+    """The fineweb preset's gate layer (language → C4 → quality → Gopher)
+    is ONE opaque Python map between the extraction's latest-wins url
+    exchange and the exact-dedup stage — no ArrowEvalPython, whose UDF
+    terms Catalyst would evaluate under merged filters on rows an earlier
+    gate already dropped. The plan is the one corpus_pipeline checkpoints
+    right before dedup_exact; the pipeline stops there."""
+    import pytest
+
+    from final_ocr_spark.presets import corpus_pipeline_preset
+    from final_ocr_spark.schema import PAGES_SCHEMA
+
+    class Checkpointed(Exception):
+        pass
+
+    plans = []
+
+    def capture(self, eager=True):
+        plans.append(_plan(self))
+        raise Checkpointed
+
+    pages = spark.createDataFrame([], PAGES_SCHEMA)
+    monkeypatch.setattr(type(pages), "localCheckpoint", capture)
+    with pytest.raises(Checkpointed):
+        corpus_pipeline_preset(pages, "fineweb")
+    plan = plans[0]
+    above = plan[: plan.index("Exchange")]
+    assert "Exchange hashpartitioning(url#" in plan  # dedup_latest's
+    assert "EvalPython" not in plan
+    assert above.count("MapInArrow") == 1 and "MapInPandas" not in above

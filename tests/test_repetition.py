@@ -100,6 +100,64 @@ def test_c4_doc_flags(spark):
     assert f2["doc_keep"] is True
 
 
+def test_c4_clean_bit_equal(spark):
+    """The plain-Python C4 kernel the gate cascade calls must return the
+    Column form's (doc_keep, clean_text) on every doc, at several
+    min_lines: Java-\\s separators (\\x0b, \\f) against token characters
+    (NBSP), CRLF and lone CR, trailing whitespace before a final Java line
+    terminator (U+0085/U+2028/U+2029), JavaScript / LOREM IPSUM case
+    variants including non-ASCII case folding, a '{' only in a dropped
+    line, a quote as the terminal character, empty and NULL text."""
+    import random
+
+    from pyspark.sql import functions as SF
+
+    from final_ocr_spark.operators.repetition import c4_clean
+
+    five = "this line has five words"
+    texts = [
+        None, "", " ", "\n\n", "Five words right here now.",
+        f"One\xa0two three four five.\nOne\x0btwo three four five.",
+        f"{five}.\r\n{five}!\r\n{five}?\r{five}.",
+        f"{five}.   \t\n  {five}!\x0c\n{five} .",
+        f"{five}. \u2028\n{five}.\x85\n{five}.\u2029 \n{five} \u2028",
+        f'He said "{five}"\n{five}.\n{five}.',
+        f"{five}.\nPlease enable JavaScript, {five}.\n{five}.",
+        f"{five}.\nJAVASCR\u0130PT and {five}.\n{five}.",
+        f"{five}.\n\uff2a\uff41\uff56\uff41script {five}.\n{five}.",
+        f"{five}.\nLOREM IPSUM {five}.\n{five}.",
+        f"{five}.\nLorem\xa0ipsum {five}.\n{five}.",
+        f"{five}.\nLOREM \u0130PSUM {five}.\n{five}.",
+        f"{five}.\n\u03a3\u039f\u03a6\u039f\u03a3 {five}.\n\u1e9e {five}.",
+        f"{five}.\nshort {{x}}\n{five}.\n{five}.",
+        f"{five}.\n\n\n{five}!\n \n{five}?",
+    ]
+    rng = random.Random(5)
+    pieces = [five, "Five.", "JavaScript", "lorem ipsum", "{", "\xa0",
+              "\u0130", "\u212a", ".", "!", "?", '"', "word", "  "]
+    seps = ["\n", "\r\n", "\n\n", " \n", "\r", "\x0b", "\u2028",
+            "\x85", " ", ". "]
+    for _ in range(200):
+        texts.append("".join(
+            rng.choice(pieces) + rng.choice(seps)
+            for _ in range(rng.randint(0, 12))
+        ))
+    df = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(texts)], "i long, text string"
+    )
+    mins = (0, 1, 3)
+    cols = []
+    for m in mins:
+        f = c4_features(SF.col("text"), min_lines=m)
+        cols += [f["doc_keep"].alias(f"keep{m}"), f["clean_text"].alias(f"clean{m}")]
+    for r in df.select("i", *cols).collect():
+        t = texts[r["i"]]
+        for m in mins:
+            assert c4_clean(t, m) == (r[f"keep{m}"], r[f"clean{m}"]), (
+                f"text #{r['i']} min_lines={m}: {t!r}"
+            )
+
+
 def test_repetition_fuzz_vs_python_reference(spark):
     """200 seeded random texts, one Spark job, cross-checked against a
     pure-Python reimplementation of every integer metric."""
@@ -187,6 +245,10 @@ def test_repetition_features_udf_bit_equal(spark):
         # top-2-gram tie: 'aa bb' and 'c d' both occur twice; the winner
         # (lexicographically smaller 'aa bb', 5 chars vs 3) decides the count
         "aa bb aa bb zz c d zz c d",
+        # Java's $ also matches before one final line terminator, so these
+        # lines / paragraphs trim to equal strings
+        "ab \u2028\nab\u2028\nab\t\u2029",
+        "a b \x85\n\na b\x85\n\nc",
         None,
     ]
     df = spark.createDataFrame(
@@ -236,6 +298,8 @@ def test_gopher_keep_udf_bit_equal(spark):
         "buy now " * 60,                       # spam: fails grams
         ("line a\nline a\nline b\n" * 5),      # duplicate lines
         ("para one\n\npara  one\n\npara two"), # rewrapped dup paras
+        "ab \u2028\nab\u2028\nab\t\u2029",   # Java $ before final EOL
+        "a b \x85\n\na b\x85\n\nc",
         None,
     ]
     df = spark.createDataFrame(

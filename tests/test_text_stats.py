@@ -39,6 +39,7 @@ def test_quality_score_udf_bit_equals_column_form(spark):
     token counts and word lengths."""
     from final_ocr_spark.operators.text_stats import (
         quality_score,
+        quality_score_py,
         quality_score_udf,
     )
 
@@ -72,6 +73,8 @@ def test_quality_score_udf_bit_equals_column_form(spark):
     }
     for i, (c, u) in sorted(got.items()):
         assert c == u, (i, c, u, rows[i][1][:40] if rows[i][1] else rows[i][1])
+        # the kernel the gate cascade calls directly, outside any UDF
+        assert quality_score_py(rows[i][1]) == c, i
     assert got[0] == (12.5, 12.5)  # the pinned size(null) artifact
     assert got[1][0] == 62.5
 
