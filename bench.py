@@ -203,26 +203,15 @@ def main() -> None:
                 .write.mode("overwrite").parquet(str(fixed))
         return corpus_pipeline(spark.read.parquet(str(fixed))).count()
 
-    def _gate_docs(spark):
-        return _docs(spark).select("doc_id", "text")
-
     def extra_gopher_gate_arrow(spark):
-        # paired gate-only rows (sf-scaled): what defaulting the pipeline's
-        # gopher gate to the Arrow twin buys vs the interpreted Column
-        # folds, on the same documents table
+        # gate-only row (sf-scaled): the pipeline's Gopher gate kernel
+        # (the Arrow UDF) alone over the documents table
         from final_ocr_spark.operators.repetition import (
             gopher_repetition_keep_udf,
         )
 
-        return _gate_docs(spark).filter(
+        return _docs(spark).select("doc_id", "text").filter(
             gopher_repetition_keep_udf()(F.col("text"))
-        ).count()
-
-    def extra_gopher_gate_jvm(spark):
-        from final_ocr_spark.operators.repetition import gopher_repetition_keep
-
-        return _gate_docs(spark).filter(
-            gopher_repetition_keep(F.col("text"))
         ).count()
 
     queries_extra: dict[str, dict] = {}
@@ -234,7 +223,6 @@ def main() -> None:
         "semantic_dedup_kmeans": extra_semantic_kmeans,
         "pipeline_default_6k": extra_pipeline_default,
         "gopher_gate_arrow": extra_gopher_gate_arrow,
-        "gopher_gate_jvm": extra_gopher_gate_jvm,
     }.items():
         t0 = time.monotonic()
         n = fn(spark)

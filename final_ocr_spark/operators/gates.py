@@ -27,13 +27,10 @@ The kernels are the plain-Python functions the Arrow UDF twins wrap
 :func:`~final_ocr_spark.operators.repetition.c4_clean`,
 :func:`~final_ocr_spark.operators.text_stats.quality_score_py`,
 :func:`~final_ocr_spark.operators.repetition.gopher_keep`), each pinned
-bit-equal to its Column form, so the cascade's survivors equal
-:func:`staged_gates`' (tests/test_pipeline.py differential).
-
-:func:`staged_gates` is the filter chain: the pipeline runs it when a
-caller picks a Column form (``quality_arrow=False`` or
-``gopher_arrow=False``), and the tests use it, with both Arrow twins, as
-the reference for the cascade.
+bit-equal to its Column spec form (tests/test_repetition.py,
+tests/test_text_stats.py). The cascade is the only implementation of the
+gate layer: ``corpus_pipeline`` always runs it, and tests/test_pipeline.py
+pins it against a chain of those Arrow twins as filters.
 """
 
 from __future__ import annotations
@@ -71,7 +68,7 @@ def cascade_batches(
     (re-detected when ``lang_detect``), ``text`` (the C4-cleaned text when
     ``c4_min_lines`` is set) and an appended ``quality_score``.
 
-    NULL handling follows the staged chain's filters: a NULL ``lang`` fails
+    NULL handling follows the twins under a filter: a NULL ``lang`` fails
     ``allow``, a NULL text detects as ``'und'``, fails the C4 gate, scores
     12.5 and fails the Gopher gate."""
     detect, c4, quality, keep = kernels
@@ -109,8 +106,16 @@ def cascade_batches(
 
 
 def _allowed(lang_allow) -> list[str] | None:
+    """The sorted, de-duplicated language allow-list, or None for no
+    language gate. A bare string is refused: iterating ``"en"`` would
+    allow the languages ``"e"`` and ``"n"`` and silently drop every doc."""
     if lang_allow is None:
         return None
+    if isinstance(lang_allow, str):
+        raise ValueError(
+            f"lang_allow must be a collection of language codes, not the "
+            f"string {lang_allow!r}; use ({lang_allow!r},)"
+        )
     allow = sorted({str(lang) for lang in lang_allow})
     if not allow:
         raise ValueError("lang_allow must be non-empty when set")
@@ -129,8 +134,8 @@ def gate_cascade(
 ) -> DataFrame:
     """Stages 1c-2 as one short-circuiting Python pass: ``docs`` (with
     ``text`` and ``lang`` columns) → the survivors, same columns plus
-    ``quality_score``. Same rows, values and column order as
-    :func:`staged_gates` with the Arrow twins.
+    ``quality_score``. Same rows, values and column order as chaining the
+    Arrow UDF twins as ``withColumn``/``filter`` steps in gate order.
 
     Without ``lang_detect`` the declared ``lang`` column gates as a Column
     filter ahead of the map, so out-of-scope rows never cross into
@@ -152,67 +157,3 @@ def gate_cascade(
     )
     return docs.mapInArrow(fn, schema)
 
-
-def staged_gates(
-    docs: DataFrame,
-    *,
-    lang_detect: bool = False,
-    lang_allow: tuple[str, ...] | list[str] | None = None,
-    c4_line_clean: bool = False,
-    c4_min_lines: int = 3,
-    min_quality: float = 50.0,
-    quality_arrow: bool = True,
-    gopher: bool = True,
-    gopher_arrow: bool = True,
-) -> DataFrame:
-    """Stages 1c-2 as a chain of Column filters and projections, with each
-    of the quality and Gopher gates in its Column form or its Arrow twin.
-    The pipeline runs this form only when a Column form is asked for; with
-    both Arrow twins it is the reference :func:`gate_cascade` is tested
-    against."""
-    # 1c. language gate: lang_detect re-detects from the EXTRACTED text and
-    # overwrites the lang column even with no lang_allow (the corpus ships
-    # corrected labels)
-    if lang_detect:
-        from final_ocr_spark.operators.text_stats import detect_lang_udf
-
-        docs = docs.withColumn("lang", detect_lang_udf()(F.col("text")))
-    allow = _allowed(lang_allow)
-    if allow is not None:
-        docs = docs.filter(F.col("lang").isin(*allow))
-
-    # 1d. C4 line clean: the verdict and the rewrite both derive from the
-    # PRE-rewrite text (one withColumns — doc_keep on the cleaned text would
-    # apply the line rules twice)
-    if c4_line_clean:
-        from final_ocr_spark.operators.repetition import c4_features
-
-        feats = c4_features(F.col("text"), min_lines=c4_min_lines)
-        docs = (
-            docs.withColumns(
-                {"_c4_keep": feats["doc_keep"], "text": feats["clean_text"]}
-            )
-            .filter(F.col("_c4_keep"))
-            .drop("_c4_keep")
-        )
-
-    # 2. quality gate, then the Gopher repetition gate
-    if quality_arrow:
-        from final_ocr_spark.operators.text_stats import quality_score_udf
-
-        q = quality_score_udf()(F.col("text"))
-    else:
-        from final_ocr_spark.operators.text_stats import quality_score
-
-        q = quality_score(F.col("text"))
-    docs = docs.withColumn("quality_score", q)
-    docs = docs.filter(F.col("quality_score") >= F.lit(min_quality))
-    if gopher:
-        from final_ocr_spark.operators.repetition import (
-            gopher_repetition_keep,
-            gopher_repetition_keep_udf,
-        )
-
-        keep = gopher_repetition_keep_udf() if gopher_arrow else gopher_repetition_keep
-        docs = docs.filter(keep(F.col("text")))
-    return docs

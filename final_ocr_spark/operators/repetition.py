@@ -305,111 +305,6 @@ def gopher_repetition_checks(feats: dict[str, Column]) -> dict[str, Column]:
     return checks
 
 
-def _bind(col: Column, f) -> Column:
-    """Let-binding for interpreted Column expressions: evaluate ``col``
-    ONCE and pass it to ``f`` as a lambda variable.
-
-    Why this exists (r6, guide §4.1/§2.4): higher-order functions are
-    CodegenFallback, so a Filter predicate built from them is evaluated by
-    recursive ``eval`` with NO common-subexpression elimination — every
-    textual reuse of e.g. ``words_of(text)`` re-runs the regex split.
-    ``exists`` over the 1-element array ``array(col)`` evaluates ``col``
-    exactly once, binds the value to the lambda variable (references are
-    plain variable reads), and returns exactly ``f(col)`` under 3-valued
-    logic: pred TRUE/FALSE/NULL -> TRUE/FALSE/NULL, and a NULL ``col`` is
-    carried as a NULL *element* (``array(col)`` is never an empty array),
-    so null propagation matches the unbound form.
-
-    That NULL-preserving result depends on
-    ``spark.sql.legacy.followThreeValuedLogicInArrayExists`` (default
-    true). With it false, ``exists`` maps a NULL predicate to FALSE, so a
-    NULL text makes :func:`gopher_repetition_keep` FALSE instead of NULL:
-    the filter verdict is the same (both drop the row), but the value no
-    longer equals the spec form's."""
-    return F.exists(F.array(col), f)
-
-
-def gopher_repetition_keep(text_col) -> Column:
-    """Single boolean: document passes every Gopher repetition check.
-
-    Same verdict as AND-folding :func:`gopher_repetition_checks` over
-    :func:`repetition_features` (3-valued AND is order-insensitive; pinned
-    by tests against both that spec form and the Arrow twin), restructured
-    for interpreted evaluation (r6):
-
-    * ``lines`` / ``paras`` / ``words`` are :func:`_bind`-bound — computed
-      once instead of once per check that mentions them (the spec form
-      re-split ``words`` for all 9 gram sizes);
-    * gram arrays build INCREMENTALLY — grams(n+1) is ONE ``zip_with``
-      against the (n+1)-shifted words over the bound grams(n), replacing
-      :func:`word_ngrams`'s from-scratch chains (9 zip_with passes total
-      vs 45).
-
-    Measured (sf0.1 documents, 5 k docs, local[32], interleaved): 12.3-12.7 s
-    -> 4.3-4.4 s per filter+count, 0 verdict diffs. The per-doc sorts+folds
-    (9 gram sizes + lines + paras) now dominate, which is the irreducible
-    work of the Column form; the Arrow twin
-    (:func:`gopher_repetition_keep_udf`) remains ~10x faster still and stays
-    the pipeline default.
-    """
-    T = GOPHER_THRESHOLDS_PCT
-    n_chars = F.length(text_col).cast("long")
-
-    def seg_checks(frac_key: str, char_key: str):
-        def checks(seg):
-            n = F.size(seg).cast("long")
-            # _frac_le reads its denominator twice: bind the O(n) length
-            # fold so it runs once
-            return (
-                _frac_le(n - F.size(F.array_distinct(seg)).cast("long"), n,
-                         T[frac_key])
-                & _bind(_sum_lengths(seg),
-                        lambda chars: _frac_le(run_stats(seg)["dup_chars"],
-                                               chars, T[char_key]))
-            )
-
-        return checks
-
-    def top_check(grams, n):
-        # best_run >= 2 gate: a gram occurring once is not repetition
-        # (see repetition_features); the struct is bound so both field
-        # reads share ONE sort+fold
-        def check(rs):
-            top = F.when(rs["best_run"] >= 2, rs["best_chars"]).otherwise(_zero())
-            return _frac_le(top, n_chars, T[f"top{n}gram_char_frac"])
-
-        return _bind(run_stats(grams), check)
-
-    def dup_check(grams, n):
-        return _frac_le(run_stats(grams)["dup_chars"], n_chars,
-                        T[f"dup{n}gram_char_frac"])
-
-    def next_grams(words, grams, n):
-        # grams for n -> grams for n+1 (word_ngrams' inner step)
-        keep_n = F.greatest(F.size(words) - n, F.lit(0))
-        return F.zip_with(
-            F.slice(grams, 1, keep_n), F.slice(words, n + 1, keep_n),
-            lambda a, b: F.concat(a, F.lit(" "), b),
-        )
-
-    def gram_chain(words, grams, n):
-        chk = top_check(grams, n) if n <= 4 else dup_check(grams, n)
-        if n == 10:
-            return chk
-        return chk & _bind(next_grams(words, grams, n),
-                           lambda g: gram_chain(words, g, n + 1))
-
-    return (
-        _bind(norm_lines(text_col),
-              seg_checks("dup_line_frac", "dup_line_char_frac"))
-        & _bind(norm_paragraphs(text_col),
-                seg_checks("dup_para_frac", "dup_para_char_frac"))
-        & _bind(words_of(text_col),
-                lambda w: _bind(next_grams(w, w, 1),
-                                lambda g2: gram_chain(w, g2, 2)))
-    )
-
-
 # ---------------------------------------------------------------------------
 # C4 line-level cleaning
 
@@ -604,11 +499,13 @@ def gopher_keep(
     top_ns: tuple[int, ...] = (2, 3, 4),
     dup_ns: tuple[int, ...] = (5, 6, 7, 8, 9, 10),
 ):
-    """:func:`gopher_repetition_keep` of one document in plain Python — the
-    kernel that :func:`gopher_repetition_keep_udf` and the corpus gate
-    cascade (operators/gates.py) both call. Checks run cheapest first and
-    return at the first failure; NULL text returns None, which a filter
-    drops exactly like the Column form's NULL verdict.
+    """The Gopher keep verdict of one document in plain Python: the AND of
+    :func:`gopher_repetition_checks` over :func:`repetition_features` (the
+    Column spec form), computed by the kernel that
+    :func:`gopher_repetition_keep_udf` and the corpus gate cascade
+    (operators/gates.py) both call. Checks run cheapest first and return
+    at the first failure; NULL text returns None, the spec fold's NULL
+    verdict, which a filter drops.
 
     Semantics notes that make the kernel EXACT, not approximate:
 
@@ -661,12 +558,13 @@ def gopher_repetition_keep_udf(
     top_ns: tuple[int, ...] = (2, 3, 4),
     dup_ns: tuple[int, ...] = (5, 6, 7, 8, 9, 10),
 ):
-    """Arrow-batched twin of :func:`gopher_repetition_keep` — same verdict,
-    computed by :func:`gopher_keep` per batch instead of nine interpreted
-    higher-order folds per row (the Column form measures ~6-7 core-ms on a
-    ~500-word doc; this path is the simhash-popcount playbook applied to
-    the densest scan-local gate). Bit-equality is pinned by a differential
-    test over adversarial whitespace/repetition corpora.
+    """Arrow-batched Gopher keep gate: the verdict of AND-folding
+    :func:`gopher_repetition_checks` over :func:`repetition_features`,
+    computed by :func:`gopher_keep` per batch instead of the spec form's
+    interpreted higher-order folds per row (this path is the
+    simhash-popcount playbook applied to the densest scan-local gate).
+    Bit-equality with the spec fold is pinned by a differential test over
+    adversarial whitespace/repetition corpora.
 
     Deferred factory (module-level ``@pandas_udf`` needs a session)."""
     one = partial(gopher_keep, top_ns=top_ns, dup_ns=dup_ns)

@@ -25,9 +25,7 @@ to a training-ready corpus, composed from the engine's tested operators.
                               any scoring or hashing
                           2.  quality gate — composite quality score
                           2'. Gopher gate — repetition checks
-                          stopping at the first failing gate; the Column
-                          forms (quality_arrow/gopher_arrow=False) run as
-                          a JVM filter chain instead
+                          stopping at the first failing gate
       2a. wordlist gate   optional flagged-token-ratio blocklist filter
                           (caller-supplied policy list) — scan-local
       2a'. compression    optional zlib-ratio band gate (over-compressible
@@ -97,7 +95,7 @@ from final_ocr_spark.operators.dedup import (
     ngram_jaccard_pairs,
 )
 from final_ocr_spark.operators.extract_pages import extract_pages
-from final_ocr_spark.operators.gates import gate_cascade, staged_gates
+from final_ocr_spark.operators.gates import gate_cascade
 from final_ocr_spark.operators.pii import redact_pii
 from final_ocr_spark.operators.sampling import deterministic_sample, stratified_cap
 from final_ocr_spark.operators.text_stats import quality_score
@@ -108,9 +106,7 @@ def corpus_pipeline(
     pages: DataFrame,
     *,
     min_quality: float = 50.0,
-    quality_arrow: bool = True,
     gopher: bool = True,
-    gopher_arrow: bool = True,
     redact: bool = True,
     near_dup: bool = True,
     neardup_keep_best: bool = False,
@@ -235,26 +231,17 @@ def corpus_pipeline(
     # EXTRACTED text and overwrites lang even with no lang_allow (crawl-
     # declared lang headers are wrong often enough that C4/CCNet/FineWeb
     # all re-detect); the C4 clean rewrites text before any scoring or
-    # hashing. With the Arrow twins (the defaults) the gates run as one
-    # short-circuiting mapInArrow pass; a Column form (quality_arrow=False
-    # or gopher_arrow=False) keeps the JVM filter chain.
+    # hashing. The gates run as one short-circuiting mapInArrow pass.
     # The C4 line rules assume line-structured text: the HTML extractor
     # emits one line per kept block, so html corpora work as published;
     # text-PASSTHROUGH rows collapse newlines at extraction (pinned
     # byte-identity behavior), so a pre-collapsed corpus sees ONE line per
     # doc and needs c4_min_lines=1.
-    gate_kw = dict(
-        lang_detect=lang_detect, lang_allow=lang_allow,
+    docs = gate_cascade(
+        docs, lang_detect=lang_detect, lang_allow=lang_allow,
         c4_line_clean=c4_line_clean, c4_min_lines=c4_min_lines,
         min_quality=min_quality, gopher=gopher,
     )
-    if quality_arrow and (gopher_arrow or not gopher):
-        docs = gate_cascade(docs, **gate_kw)
-    else:
-        docs = staged_gates(
-            docs, quality_arrow=quality_arrow, gopher_arrow=gopher_arrow,
-            **gate_kw,
-        )
 
     # 2a. wordlist gate (optional, scan-local): drop docs whose
     # flagged-token ratio exceeds flagged_max_ratio — the C4 "bad words" /
@@ -274,10 +261,7 @@ def corpus_pipeline(
     # (over-compressible) and the noise/encoded tail (incompressible) that
     # the lexical features above can't see. Arrow batch stage, no shuffle.
     # The UDF only scores rows that survived every gate above because the
-    # gate layer's mapInArrow is opaque to Catalyst. Behind the staged
-    # chain (quality_arrow=False with the Gopher UDF) Catalyst evaluates it
-    # in the same ArrowEvalPython node as the Gopher UDF, below their
-    # merged filter, so it also scores rows the Gopher gate drops.
+    # gate layer's mapInArrow is opaque to Catalyst.
     if compression_band is not None:
         from final_ocr_spark.operators.text_stats import compression_band_gate
 
@@ -340,6 +324,22 @@ def corpus_pipeline(
     docs = docs.localCheckpoint(eager=False)
     docs = dedup_exact(docs, text_col="text", keep_col="url")
 
+    def rescore(rebuilt: DataFrame, n_dropped: str) -> DataFrame:
+        # post-rebuild hygiene shared by 4a-4c: docs emptied by the rebuild
+        # drop, and a doc that lost text (n_dropped > 0) re-scores and
+        # re-gates on quality
+        return (
+            rebuilt.filter(F.length("text") > 0)
+            .withColumn(
+                "quality_score",
+                F.when(
+                    F.col(n_dropped) > 0, quality_score(F.col("text"))
+                ).otherwise(F.col("quality_score")),
+            )
+            .filter(F.col("quality_score") >= F.lit(min_quality))
+            .drop(n_dropped)
+        )
+
     # 4a. host chrome removal (optional): lines on >= ratio of one host's
     # pages are template nav/footer — removed from ALL pages (zero copies)
     # BEFORE the keep-first dedups, so shared chrome neither survives via
@@ -348,21 +348,13 @@ def corpus_pipeline(
     if host_boilerplate_ratio is not None:
         from final_ocr_spark.operators.dedup import host_boilerplate_dedup
 
-        docs = (
+        docs = rescore(
             host_boilerplate_dedup(
                 docs, key="url", text_col="text", host_col="host",
                 min_ratio=host_boilerplate_ratio,
                 min_pages=host_boilerplate_min_pages,
-            )
-            .filter(F.length("text") > 0)
-            .withColumn(
-                "quality_score",
-                F.when(
-                    F.col("n_lines_dropped") > 0, quality_score(F.col("text"))
-                ).otherwise(F.col("quality_score")),
-            )
-            .filter(F.col("quality_score") >= F.lit(min_quality))
-            .drop("n_lines_dropped")
+            ),
+            "n_lines_dropped",
         )
 
     # 4b. paragraph dedup (optional): corpus-level boilerplate paragraphs
@@ -375,20 +367,12 @@ def corpus_pipeline(
     if paragraph_dedup_min_chars is not None:
         from final_ocr_spark.operators.dedup import paragraph_dedup
 
-        docs = (
+        docs = rescore(
             paragraph_dedup(
                 docs, key="url", text_col="text",
                 min_chars=paragraph_dedup_min_chars,
-            )
-            .filter(F.length("text") > 0)
-            .withColumn(
-                "quality_score",
-                F.when(
-                    F.col("n_paras_dropped") > 0, quality_score(F.col("text"))
-                ).otherwise(F.col("quality_score")),
-            )
-            .filter(F.col("quality_score") >= F.lit(min_quality))
-            .drop("n_paras_dropped")
+            ),
+            "n_paras_dropped",
         )
 
     # 4b'. sentence dedup (optional): the granularity below 4b — syndicated
@@ -397,20 +381,12 @@ def corpus_pipeline(
     if sentence_dedup_min_chars is not None:
         from final_ocr_spark.operators.dedup import sentence_dedup
 
-        docs = (
+        docs = rescore(
             sentence_dedup(
                 docs, key="url", text_col="text",
                 min_chars=sentence_dedup_min_chars,
-            )
-            .filter(F.length("text") > 0)
-            .withColumn(
-                "quality_score",
-                F.when(
-                    F.col("n_sents_dropped") > 0, quality_score(F.col("text"))
-                ).otherwise(F.col("quality_score")),
-            )
-            .filter(F.col("quality_score") >= F.lit(min_quality))
-            .drop("n_sents_dropped")
+            ),
+            "n_sents_dropped",
         )
 
     # 4c. duplicate-span dedup (optional): Lee-et-al exact-substring removal
@@ -421,19 +397,11 @@ def corpus_pipeline(
     if span_dedup_gram_n is not None:
         from final_ocr_spark.operators.spans import duplicate_span_dedup
 
-        docs = (
+        docs = rescore(
             duplicate_span_dedup(
                 docs, key="url", text_col="text", gram_n=span_dedup_gram_n
-            )
-            .filter(F.length("text") > 0)
-            .withColumn(
-                "quality_score",
-                F.when(
-                    F.col("n_tokens_dropped") > 0, quality_score(F.col("text"))
-                ).otherwise(F.col("quality_score")),
-            )
-            .filter(F.col("quality_score") >= F.lit(min_quality))
-            .drop("n_tokens_dropped")
+            ),
+            "n_tokens_dropped",
         )
 
     # 5. near-dup dedup: candidates → exact verify → components → reps

@@ -14,9 +14,9 @@ definitions `pipeline.corpus_pipeline` applies:
 * ``remaining``      — corpus size after applying gates cumulatively in
   pipeline order.
 
-Scale shape: every gate is a Column expression (plus the optional
-Arrow-batched compression ratio), evaluated ONCE per row in a single scan
-pass; per-partition partial sums ride one SinglePartition exchange of
+Scale shape: every gate is a Column predicate (the quality, Gopher and
+compression verdicts come from Arrow-batched UDFs), evaluated ONCE per row
+in a single scan pass; per-partition partial sums ride one SinglePartition exchange of
 O(#partitions) slim rows into the final 2×G+1-sum row (see
 :func:`_funnel_agg` for why the partial stage exists — it is the barrier
 that stops Catalyst re-inlining the heavy gate expressions into every
@@ -44,8 +44,8 @@ def _funnel_agg(docs: DataFrame, gates: list[tuple[str, Column]]) -> DataFrame:
     Each verdict must be computed ONCE per row: the first-fail term of
     gate i references every earlier gate's verdict, so letting Catalyst
     inline the raw expressions into the aggregate grows the evaluated work
-    quadratically in G (the heavy gopher folds would re-evaluate in every
-    later term — and CollapseProject DOES fold a deterministic flag
+    quadratically in G (a heavy Column fold, such as the Gopher spec form,
+    would re-evaluate in every later term — and CollapseProject DOES fold a deterministic flag
     projection straight into the agg, measured 17× slower warm). The
     barrier is structural, not a materialization: a partition-local
     pre-aggregation keyed on ``spark_partition_id()`` — nondeterministic,
@@ -95,9 +95,7 @@ def gate_funnel(
     lang_col: str = "lang",
     lang_allow: tuple[str, ...] | list[str] | None = None,
     min_quality: float | None = 50.0,
-    quality_arrow: bool = True,
     gopher: bool = True,
-    gopher_arrow: bool = True,
     flagged_wordlist: list[str] | None = None,
     flagged_max_ratio: float = 0.01,
     compression_band: tuple[float, float] | None = None,
@@ -108,46 +106,35 @@ def gate_funnel(
     row. ``extra_gates`` appends caller-supplied keep-predicates (name →
     boolean Column) after the built-ins.
 
-    Each gate predicate is the EXACT expression ``corpus_pipeline`` filters
-    on — including its empty/NULL-text conventions, so the funnel never
-    mis-attributes a drop relative to the pipeline it reports on: empty
-    text passes the gopher checks vacuously (every denominator is 0) and
-    scores 62.5 on quality; NULL text fails quality (score 12.5) and
-    gopher (NULL verdict = dropped by filter) but PASSES wordlist (ratio
-    0.0); the compression gate fails both (no signal ≠ clean)."""
-    from final_ocr_spark.operators.repetition import gopher_repetition_keep
+    Each gate's verdict is the one ``corpus_pipeline``'s gate cascade
+    (operators/gates.py) reaches for the same document: the language,
+    quality and Gopher predicates use the allow-list rule and the Arrow
+    UDF twins of the cascade's kernels, so ``kept.remaining`` equals the
+    cascade's row count (tests/test_funnel.py). That includes the
+    empty/NULL-text conventions, so the funnel never mis-attributes a drop
+    relative to the pipeline it reports on: empty text passes the gopher
+    checks vacuously (every denominator is 0) and scores 62.5 on quality;
+    NULL text fails quality (score 12.5) and gopher (NULL verdict =
+    dropped by filter) but PASSES wordlist (ratio 0.0); the compression
+    gate fails both (no signal ≠ clean)."""
+    from final_ocr_spark.operators.gates import _allowed
+    from final_ocr_spark.operators.repetition import gopher_repetition_keep_udf
     from final_ocr_spark.operators.text_stats import (
         compression_ratio_udf,
         flagged_token_ratio,
-        quality_score,
+        quality_score_udf,
     )
 
     text = F.col(text_col)
     gates: list[tuple[str, Column]] = []
-    if lang_allow is not None:
-        gates.append(("lang", F.col(lang_col).isin(*[str(x) for x in lang_allow])))
+    allow = _allowed(lang_allow)
+    if allow is not None:
+        gates.append(("lang", F.col(lang_col).isin(*allow)))
     if min_quality is not None:
-        if quality_arrow:
-            # bit-equal Arrow twin, same default as corpus_pipeline
-            from final_ocr_spark.operators.text_stats import quality_score_udf
-
-            q = quality_score_udf()(text)
-        else:
-            q = quality_score(text)
+        q = quality_score_udf()(text)
         gates.append(("quality", q >= F.lit(float(min_quality))))
     if gopher:
-        if gopher_arrow:
-            # same default as corpus_pipeline: the Arrow twin is bit-equal
-            # (tests/test_repetition.py) and ~5× cheaper than the
-            # interpreted Column folds, so the report costs what the
-            # pipeline's own gate costs
-            from final_ocr_spark.operators.repetition import (
-                gopher_repetition_keep_udf,
-            )
-
-            gates.append(("gopher", gopher_repetition_keep_udf()(text)))
-        else:
-            gates.append(("gopher", gopher_repetition_keep(text)))
+        gates.append(("gopher", gopher_repetition_keep_udf()(text)))
     if flagged_wordlist is not None:
         gates.append(
             ("wordlist",

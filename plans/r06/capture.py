@@ -52,17 +52,6 @@ def main() -> None:
             pages = spark.read.parquet(
                 "/tmp/final_ocr_spark_bench/bench_6000_42.parquet")
             return corpus_pipeline(pages)
-        if name == "gopher_gate_jvm":
-            from pyspark.sql import functions as F
-
-            from final_ocr_spark.operators.repetition import (
-                gopher_repetition_keep,
-            )
-            return (
-                spark.read.parquet(os.path.join(SF, "documents.parquet"))
-                .repartition(32).select("doc_id", "text")
-                .filter(gopher_repetition_keep(F.col("text")))
-            )
         if name == "semantic_dedup_kmeans":
             from final_ocr_spark.operators.similarity import (
                 semantic_dedup_kmeans,
@@ -70,12 +59,13 @@ def main() -> None:
             emb = spark.read.parquet(
                 os.path.join(SF, "embeddings.parquet")
             ).repartition(32)
-            k = max(8, emb.count() // 64)
-            return semantic_dedup_kmeans(emb, k=k, threshold=0.97)
+            # fixed k = max(8, n // 64) for sf0.1's 2,000 embeddings, so
+            # building the target runs no job
+            return semantic_dedup_kmeans(emb, k=31, threshold=0.97)
         raise KeyError(name)
 
     for name in ["pack_chunks_1024", "pipeline_default_6k",
-                 "gopher_gate_jvm", "semantic_dedup_kmeans"]:
+                 "semantic_dedup_kmeans"]:
         targets[name] = (lambda n=name: _extra(n))
 
     for name, fn in targets.items():

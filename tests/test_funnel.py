@@ -103,16 +103,24 @@ def test_funnel_matches_pipeline_gate_semantics(spark):
     assert f["quality"]["n_failed_first"] == 1
     assert f["kept"]["remaining"] == 2
 
-    # differential vs the pipeline's own filter expressions
-    from final_ocr_spark.operators.repetition import gopher_repetition_keep
-    from final_ocr_spark.operators.text_stats import quality_score
+    # differential vs the pipeline's own gate layer: the funnel keeps what
+    # the cascade keeps, here and on the cascade tests' corpus (docs that
+    # fail each gate, an undeclared lang, empty and NULL text)
+    from final_ocr_spark.operators.gates import gate_cascade
+    from tests.test_pipeline import _gate_corpus
 
-    survivors = (
-        docs.filter(quality_score(F.col("text")) >= 50.0)
-        .filter(gopher_repetition_keep(F.col("text")))
-        .count()
+    gate_corpus = spark.createDataFrame(
+        _gate_corpus(),
+        "url string, warc_ts timestamp, text string, lang string, host string",
     )
-    assert survivors == f["kept"]["remaining"]
+    for corpus, kw in (
+        (docs, dict(lang_allow=None, min_quality=50.0, gopher=True)),
+        (gate_corpus, dict(lang_allow=("en",), min_quality=50.0, gopher=True)),
+        (gate_corpus, dict(lang_allow=("en", "de"), min_quality=80.0,
+                           gopher=False)),
+    ):
+        kept = _funnel_dict(gate_funnel(corpus, **kw))["kept"]["remaining"]
+        assert kept == gate_cascade(corpus, **kw).count(), kw
 
 
 def test_funnel_extra_gate_names_with_metacharacters(spark):
@@ -150,14 +158,22 @@ def test_funnel_is_one_pass_no_shuffle(spark):
     a projection SEPARATE from the aggregate, evaluated once per row
     (Catalyst would otherwise re-inline them into every first-fail term;
     measured 17× slower warm)."""
-    from final_ocr_spark.operators.repetition import gopher_repetition_keep
+    from final_ocr_spark.operators.repetition import (
+        gopher_repetition_checks,
+        repetition_features,
+    )
     from final_ocr_spark.operators.text_stats import quality_score
     from final_ocr_spark.plans.funnel import _funnel_agg
 
     docs = _corpus(spark)
+    gopher_spec = F.lit(True)
+    for check in gopher_repetition_checks(
+        repetition_features(F.col("text"))
+    ).values():
+        gopher_spec = gopher_spec & check
     gates = [
         ("quality", quality_score(F.col("text")) >= 50.0),
-        ("gopher", gopher_repetition_keep(F.col("text"))),
+        ("gopher", gopher_spec),
     ]
     agg = _funnel_agg(docs, gates)
     plan = agg._jdf.queryExecution().executedPlan().toString()

@@ -645,25 +645,6 @@ def test_corpus_pipeline_sample_and_temperature_salts_independent(spark):
     assert kept["en"] <= round(1.35 * kept["de"])
 
 
-def test_corpus_pipeline_gopher_arrow_same_verdicts(spark):
-    """gopher_arrow swaps the gate implementation, never the verdicts: the
-    same corpus yields the same surviving url set from the pure-JVM Column
-    gate and the (default) Arrow fast path."""
-    rows = [
-        ("https://a.example.com/1", GOOD),
-        ("https://spam.example.com/5", "buy now " * 60),
-        ("https://b.example.com/2",
-         "a calm unique page about rivers and the slow way they carve the "
-         "valley stone over ten thousand quiet and unhurried years"),
-    ]
-    base = corpus_pipeline(_pages(spark, rows), near_dup=False,
-                           gopher_arrow=False)
-    fast = corpus_pipeline(_pages(spark, rows), near_dup=False)
-    assert sorted(r["url"] for r in base.collect()) == \
-           sorted(r["url"] for r in fast.collect())
-    assert all("spam" not in r["url"] for r in fast.collect())
-
-
 # the gate layer's corpus_pipeline kwargs (stages 1c-2)
 _GATE_KW = ("lang_detect", "lang_allow", "c4_line_clean", "c4_min_lines",
             "min_quality", "gopher")
@@ -708,14 +689,45 @@ def _gate_corpus():
     ]
 
 
+def _staged_chain(docs, *, lang_detect, lang_allow, c4_line_clean,
+                  c4_min_lines, min_quality, gopher):
+    """Stages 1c-2 as a chain of the Arrow UDF twins and Column filters in
+    gate order: the reference the one-pass cascade is pinned to."""
+    from final_ocr_spark.operators.repetition import (
+        c4_features, gopher_repetition_keep_udf,
+    )
+    from final_ocr_spark.operators.text_stats import (
+        detect_lang_udf, quality_score_udf,
+    )
+
+    if lang_detect:
+        docs = docs.withColumn("lang", detect_lang_udf()(F.col("text")))
+    if lang_allow is not None:
+        docs = docs.filter(F.col("lang").isin(*sorted(set(lang_allow))))
+    if c4_line_clean:
+        feats = c4_features(F.col("text"), min_lines=c4_min_lines)
+        docs = (
+            docs.withColumns(
+                {"_c4_keep": feats["doc_keep"], "text": feats["clean_text"]}
+            )
+            .filter(F.col("_c4_keep"))
+            .drop("_c4_keep")
+        )
+    docs = docs.withColumn("quality_score", quality_score_udf()(F.col("text")))
+    docs = docs.filter(F.col("quality_score") >= F.lit(min_quality))
+    if gopher:
+        docs = docs.filter(gopher_repetition_keep_udf()(F.col("text")))
+    return docs
+
+
 def test_gate_cascade_equals_staged_chain(spark):
-    """The one-pass cascade must return exactly what today's staged chain
-    of Arrow-twin UDFs and Column filters returns — rows, values, column
+    """The one-pass cascade must return exactly what the staged chain of
+    Arrow-twin UDFs and Column filters returns — rows, values, column
     order and types — under the pipeline defaults and the fineweb, c4 and
     gopher presets' gate settings."""
     import inspect
 
-    from final_ocr_spark.operators.gates import gate_cascade, staged_gates
+    from final_ocr_spark.operators.gates import gate_cascade
     from final_ocr_spark.presets import preset_kwargs
 
     docs = spark.createDataFrame(
@@ -731,11 +743,35 @@ def test_gate_cascade_equals_staged_chain(spark):
             kw.update({k: v for k, v in preset_kwargs(preset).items()
                        if k in _GATE_KW})
         got = gate_cascade(docs, **kw)
-        want = staged_gates(docs, quality_arrow=True, gopher_arrow=True, **kw)
+        want = _staged_chain(docs, **kw)
         assert got.schema == want.schema, preset
         got_rows, want_rows = sorted(got.collect()), sorted(want.collect())
         assert got_rows == want_rows, preset
         assert 0 < len(got_rows) < docs.count(), preset
+
+
+def test_bare_string_lang_allow_is_refused(spark):
+    """A bare string is not an allow-list: iterating "en" would allow the
+    languages "e" and "n" and silently drop every doc, so the gate layer
+    refuses it — directly, through a preset override, and in the gate
+    funnel that reports on it."""
+    import pytest
+
+    from final_ocr_spark.operators.gates import gate_cascade
+    from final_ocr_spark.plans.funnel import gate_funnel
+    from final_ocr_spark.presets import preset_kwargs
+
+    docs = spark.createDataFrame(
+        _gate_corpus(),
+        "url string, warc_ts timestamp, text string, lang string, host string",
+    )
+    with pytest.raises(ValueError, match="lang_allow"):
+        gate_cascade(docs, lang_allow="en")
+    with pytest.raises(ValueError, match="lang_allow"):
+        corpus_pipeline(_pages(spark, [("https://a.example.com/1", GOOD)]),
+                        **preset_kwargs("fineweb", lang_allow="de"))
+    with pytest.raises(ValueError, match="lang_allow"):
+        gate_funnel(docs, lang_allow="en")
 
 
 def test_gate_cascade_runs_each_kernel_once_per_doc_reaching_it():

@@ -4,7 +4,7 @@ from pyspark.sql import functions as F
 
 from final_ocr_spark.operators.repetition import (
     c4_features,
-    gopher_repetition_keep,
+    gopher_keep,
     repetition_features,
     run_stats,
     word_ngrams,
@@ -68,13 +68,11 @@ def test_repetition_features_ngram_counts(spark):
     assert f["dup2gram_chars"] == 9 + 6  # both grams duplicated
 
 
-def test_gopher_keep_flags(spark):
+def test_gopher_keep_flags():
     clean = " ".join(f"w{i}" for i in range(100))
     spam = "buy now " * 50
-    df = spark.createDataFrame([(1, clean), (2, spam)], ["i", "text"])
-    got = {r["i"]: r["k"] for r in
-           df.select("i", gopher_repetition_keep(F.col("text")).alias("k")).collect()}
-    assert got == {1: True, 2: False}
+    assert gopher_keep(clean) is True
+    assert gopher_keep(spam) is False
 
 
 def test_c4_features(spark):
@@ -271,23 +269,17 @@ def test_repetition_features_udf_bit_equal(spark):
             )
 
 
-def test_gopher_keep_udf_bit_equal(spark):
-    """The Arrow fast path must agree with the Column form on every doc —
-    including adversarial whitespace (NBSP, U+2028, vertical tab, form
-    feed, CRLF), repetition edge cases around each threshold, empty and
-    null text."""
+def _gopher_adversarial_texts():
+    """Adversarial corpus for the Gopher gate: Java-vs-Python whitespace
+    (NBSP, U+2028, vertical tab, form feed, CRLF), trailing whitespace
+    before a final Java line terminator, repetition edge cases around each
+    threshold, a top-gram tie, empty text and NULL text."""
     import random
-
-    from pyspark.sql import functions as SF
-
-    from final_ocr_spark.operators.repetition import (
-        gopher_repetition_keep, gopher_repetition_keep_udf,
-    )
 
     rng = random.Random(77)
     vocab = ["aa", "b", "ccc", "dd", "e", "ffff", "spam", "now",
-             "g hh",      # NBSP inside a token (not Java \s)
-             "x y",       # line separator (not Java \r?\n)
+             "g\xa0hh",      # NBSP inside a token (not Java \s)
+             "x\u2028y",     # line separator (not Java \r?\n)
              "\n", "\n\n", "  ", "\t", "\x0b", "\x0c", "\r\n"]
     texts = []
     for _ in range(250):
@@ -300,49 +292,45 @@ def test_gopher_keep_udf_bit_equal(spark):
         ("para one\n\npara  one\n\npara two"), # rewrapped dup paras
         "ab \u2028\nab\u2028\nab\t\u2029",   # Java $ before final EOL
         "a b \x85\n\na b\x85\n\nc",
+        "aa bb aa bb zz c d zz c d",            # top-gram tie
         None,
     ]
+    return texts
+
+
+def test_gopher_keep_udf_bit_equal(spark):
+    """The Arrow gate (gopher_repetition_keep_udf) must give, row for row,
+    the verdict of gopher_keep — the kernel the gate cascade calls
+    directly — on the adversarial corpus; NULL text gives NULL."""
+    from pyspark.sql import functions as SF
+
+    from final_ocr_spark.operators.repetition import gopher_repetition_keep_udf
+
+    texts = _gopher_adversarial_texts()
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "i long, text string"
     )
-    keep_col = gopher_repetition_keep(SF.col("text"))
     keep_udf = gopher_repetition_keep_udf()(SF.col("text"))
-    rows = df.select("i", keep_col.alias("a"), keep_udf.alias("b")).collect()
+    rows = df.select("i", keep_udf.alias("k")).collect()
+    assert len(rows) == len(texts)
     for r in rows:
-        assert r["a"] == r["b"], f"text #{r['i']}: {texts[r['i']]!r}"
+        t = texts[r["i"]]
+        want = None if t is None else gopher_keep(t)
+        assert r["k"] == want, f"text #{r['i']}: {t!r}"
 
 
 def test_gopher_keep_equals_spec_and_fold(spark):
-    """The let-bound keep (r6: lines/paras/words bound once, gram arrays
-    built incrementally) must equal the spec form — AND-folding
+    """The Arrow gate must equal the spec form — AND-folding
     gopher_repetition_checks over repetition_features — on the adversarial
     corpus, including 3-valued-logic rows (null text => NULL, which both
-    forms produce and filter drops)."""
-    import random
-
+    forms produce and a filter drops)."""
     from pyspark.sql import functions as SF
 
     from final_ocr_spark.operators.repetition import (
-        gopher_repetition_checks, gopher_repetition_keep,
-        repetition_features,
+        gopher_repetition_checks, gopher_repetition_keep_udf,
     )
 
-    rng = random.Random(77)
-    vocab = ["aa", "b", "ccc", "dd", "e", "ffff", "spam", "now",
-             "g hh", "x y", "\n", "\n\n", "  ", "\t",
-             "\x0b", "\x0c", "\r\n"]
-    texts = []
-    for _ in range(250):
-        n = rng.randint(0, 60)
-        texts.append(" ".join(rng.choice(vocab) for _ in range(n)))
-    texts += [
-        "", " ", "\n\n\n", "one",
-        "buy now " * 60,
-        ("line a\nline a\nline b\n" * 5),
-        ("para one\n\npara  one\n\npara two"),
-        "aa bb aa bb zz c d zz c d",
-        None,
-    ]
+    texts = _gopher_adversarial_texts()
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "i long, text string"
     )
@@ -351,10 +339,10 @@ def test_gopher_keep_equals_spec_and_fold(spark):
         repetition_features(SF.col("text"))
     ).values():
         spec = spec & c
-    rows = df.select(
-        "i",
-        gopher_repetition_keep(SF.col("text")).alias("a"),
-        spec.alias("b"),
-    ).collect()
+    keep_udf = gopher_repetition_keep_udf()(SF.col("text"))
+    rows = df.select("i", spec.alias("a"), keep_udf.alias("b")).collect()
+    assert len(rows) == len(texts)
     for r in rows:
         assert r["a"] == r["b"], f"text #{r['i']}: {texts[r['i']]!r}"
+        if texts[r["i"]] is None:
+            assert r["a"] is None
