@@ -1043,13 +1043,14 @@ def _rep_corpus(spark, sf):
 def _q39_gopher_repetition(spark, sf):
     """Gopher repetition signals (dup lines/paragraphs, top-n-gram and
     duplicated-n-gram character counts) + the composite keep flag — all
-    integer arithmetic, zero data shuffle. r6: the counts come from the
-    Arrow twin (repetition_features_udf — bit-equal to the Column folds by
-    differential test; same integers, same oracle) because the Column
-    form's expression tree cost ~2 s of Catalyst planning per compile and
-    ~100 core-ms/doc interpreted evaluation (OPTIMIZATION_r06.md §q39);
-    the keep flag reuses gopher_repetition_checks over the extracted
-    fields, so the threshold rule has exactly one definition."""
+    integer arithmetic, zero data shuffle. The counts come from
+    repetition_features_udf, the one repetition-count path: r6 replaced
+    the Column folds, whose expression tree cost ~2 s of Catalyst planning
+    per compile and ~100 core-ms/doc interpreted evaluation
+    (OPTIMIZATION_r06.md §q39); those folds now live in tests/spec_forms.py
+    as the differential oracle that pins the same integers. The keep flag
+    reuses gopher_repetition_checks over the extracted fields, so the
+    threshold rule has exactly one definition."""
     from final_ocr_spark.operators.repetition import (
         gopher_repetition_checks,
         repetition_features_udf,

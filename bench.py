@@ -1,7 +1,8 @@
 """Benchmark harness (driver contract).
 
 Runs the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
-/root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON
+/root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` (default: the host's
+core count, as ``nproc`` reports it) and prints ONE JSON
 line:  {"metric": ..., "value": total_sec, "unit": "sec",
         "queries": {name: sec}, "sf": sf, ...extras}
 
@@ -24,7 +25,7 @@ def _force(df) -> int:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else 0.1
 
     from final_ocr_spark.session import get_spark

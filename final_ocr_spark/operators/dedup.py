@@ -21,13 +21,15 @@ pages dominate. Five strategies, all shuffle-conscious:
 Everything is built-in-function Spark (JVM/codegen) — no Python in the hot
 path — except the simhash popcount, where a vectorized Arrow batch beats
 every JVM formulation by 20-30× (measurement in ``simhash_sigs``).
+One signature path per sketch (``minhash_sigs``, ``simhash_sigs``); their
+interpreted Column folds are differential oracles in tests/spec_forms.py.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
@@ -82,21 +84,6 @@ def dedup_exact(df: DataFrame, text_col: str = "text", keep_col: str | None = No
         .filter(F.col(key) == F.col(key + "_keep"))
         .drop("_h", key + "_keep")
     )
-
-
-def shingles(text_col: str, k: int = 5):
-    """Column expr: lowercase word k-shingles of a text column (array<string>).
-
-    Built from split + transform over index range — stays in codegen.
-    """
-    words = F.split(F.lower(F.regexp_replace(F.col(text_col), r"[^\w\s]+", " ")), r"\s+")
-    words = F.filter(words, lambda w: w != "")
-    n = F.greatest(F.size(words) - F.lit(k - 1), F.lit(0))
-    idx = F.sequence(F.lit(0), n - F.lit(1))
-    return F.when(
-        n > 0,
-        F.transform(idx, lambda i: F.array_join(F.slice(words, i + 1, k), " ")),
-    ).otherwise(F.array().cast("array<string>"))
 
 
 # per-position rotation amounts for hash-combined shingles. Rotation+XOR is
@@ -197,49 +184,6 @@ def shingle_hashes_from(wh_col, k: int = 5):
     return F.when(n > 0, acc).otherwise(F.array().cast("array<bigint>"))
 
 
-def minhash_from_hashes(hash_col, num_hashes: int = 64, seed: int = 7):
-    """Column expr: minhash signature array<bigint> from pre-computed shingle
-    hashes — ONE pass over the array, maintaining all num_hashes mins via
-    zip_with(acc, perms(h), least).
-
-    h_i(x) = (a_i * (x mod p) + b_i) mod p over the 31-bit Mersenne prime
-    p = 2^31-1, with a_i, b_i < p. Every intermediate fits a signed 64-bit
-    long by construction (a_i·x' < 2^62), so this is ANSI-mode-safe —
-    Spark 4's default session treats long overflow as a task failure, and
-    the engine must be correct under configs it doesn't control. A 31-bit
-    universal family is ample for sketching: P(cross-doc hash collision)
-    ≈ |union of shingles|² / 2^32 ≈ 1e-3 for multi-thousand-word docs.
-    All JVM-side; no UDF.
-    """
-    import random
-
-    rng = random.Random(seed)
-    coeffs = [
-        (rng.randrange(1, _MERSENNE31), rng.randrange(0, _MERSENNE31))
-        for _ in range(num_hashes)
-    ]
-    p = F.lit(_MERSENNE31).cast("long")
-
-    def _perms(h):
-        x = F.pmod(h, p)  # [0, 2^31-1): product with a < 2^31 fits in 62 bits
-        return F.array(
-            *[F.pmod(F.lit(a).cast("long") * x + F.lit(b).cast("long"), p) for a, b in coeffs]
-        )
-
-    init = F.array(*[F.lit(_MERSENNE31).cast("long") for _ in range(num_hashes)])
-    sig = F.aggregate(
-        hash_col, init, lambda acc, h: F.zip_with(acc, _perms(h), lambda a, b: F.least(a, b))
-    )
-    return F.when(F.size(hash_col) > 0, sig)
-
-
-def minhash_signature(shingle_col, num_hashes: int = 64, seed: int = 7):
-    """Column expr: minhash signature array<bigint> of a shingle array."""
-    return minhash_from_hashes(
-        F.transform(shingle_col, lambda s: F.xxhash64(s)), num_hashes, seed
-    )
-
-
 def shingle_hash_rows(
     df: DataFrame,
     key: str = "doc_id",
@@ -257,7 +201,7 @@ def shingle_hash_rows(
     interpreted array-HOF chain on ~500-word docs (2.68 s → 0.63 s for 5k
     docs, local[32], warm) — and the ONE exchange it introduces (window
     partitionBy key) satisfies every downstream clustered distribution on
-    (key, …), so OPH minhash / collect-based consumers add NO further
+    (key, …), so minhash aggregation / collect-based consumers add NO further
     shuffles. Documents with < k words produce no rows (lag is null within
     the first k-1 positions).
 
@@ -294,20 +238,14 @@ def minhash_sigs(
     shingle_k: int = 5,
     seed: int = 7,
 ) -> DataFrame:
-    """(k, sig) CLASSIC minhash signature table — bit-identical to
-    ``minhash_from_hashes`` (same Mersenne-31 universal family, same seed
-    stream; pinned by test_minhash_sigs_equals_fold_form) but computed as
-    ``num_hashes`` codegen ``min`` aggregates over exploded shingle rows
-    instead of an interpreted array fold: 2.6× faster (8.3 s → 3.2 s, 5k
-    docs × ~500 words × 64 hashes, local[32], forced) and every
-    intermediate still fits a signed long (operands pmod'ed below 2^31 —
-    ANSI-safe).
-
-    Unlike :func:`minhash_sigs_oph` this has NO empty buckets and therefore
-    no densification bias: est_jaccard from these signatures is the
-    textbook unbiased estimator at any document length. Prefer this unless
-    profiling shows the signature stage dominates AND documents are long.
-    Documents with zero shingles produce no row (null-signature contract).
+    """(k, sig) CLASSIC minhash signature table: ``num_hashes`` codegen
+    ``min`` aggregates over exploded shingle rows — 2.6× faster than the
+    interpreted permutation fold (8.3 s → 3.2 s, 5k docs × ~500 words × 64
+    hashes, local[32], forced), which tests/spec_forms.py keeps as the
+    bit-equality oracle. Every intermediate fits a signed long (operands
+    pmod'ed below 2^31 — ANSI-safe). No empty buckets, so est_jaccard is
+    unbiased at any document length. Documents with zero shingles produce
+    no row (null-signature contract).
     """
     rows = shingle_hash_rows(df, key=key, text_col=text_col, shingle_k=shingle_k)
     return minhash_sigs_from_rows(rows, num_hashes=num_hashes, seed=seed)
@@ -344,68 +282,13 @@ def minhash_sigs_from_rows(
     )
 
 
-def minhash_sigs_oph(
-    df: DataFrame,
-    key: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 64,
-    shingle_k: int = 5,
-) -> DataFrame:
-    """(k, sig) signature table via ONE-PERMUTATION HASHING (Li et al. 2012):
-    bucket each shingle hash by ``pmod(h, num_hashes)`` and take the min hash
-    per bucket — O(shingles) total work instead of the classic
-    O(shingles × num_hashes) permutation fold.
-
-    Why this shape (measured): Spark evaluates higher-order-function lambdas
-    in INTERPRETED mode — they never enter whole-stage codegen — so the
-    classic ``aggregate``+``zip_with`` fold (minhash_from_hashes) costs ~3 µs
-    per (shingle × hash) slot. OPH moves the work into
-    explode → partial/final hash aggregation, which IS Tungsten codegen:
-    40× faster on ~500-word documents (8.3 s → 0.2 s for 5k docs × 32
-    hashes at local[32]) and the gap widens with document length. The
-    explode never shuffles raw shingle rows — map-side partial aggregation
-    collapses them to ≤ num_hashes rows per doc before the exchange, so
-    shuffle volume ≈ the signature itself (the scale-relevant property).
-
-    Empty buckets are densified deterministically from the document's
-    global min hash (rotate-XOR of position), a pure function of the
-    shingle SET, so two near-identical documents densify identically and
-    banding recall is preserved. Documents with zero shingles (< shingle_k
-    words) are excluded, matching minhash_from_hashes's null-signature
-    contract.
-
-    **SHORT-DOCUMENT BIAS — read before using.** When a document has far
-    fewer shingles than ``num_hashes``, most buckets are empty and densify
-    from the global min alone; two SHORT documents that happen to share
-    their minimum shingle then agree on every densified position and
-    ``est_jaccard`` is wildly inflated (measured: a true-Jaccard-0.33 pair
-    of 6-word docs matches 63/64 positions). For corpora of long documents
-    (shingles ≫ num_hashes) empty buckets are rare and the bias is
-    negligible — that is the regime where OPH's O(shingles) cost wins.
-    :func:`minhash_sigs` (classic family via codegen aggregates, unbiased
-    at any length) is the default used by ``minhash_near_dups``; choose OPH
-    only when the signature stage dominates profiling AND documents are
-    reliably long, or follow candidates with an exact-verify stage.
-
-    ANSI-safe throughout: pmod / min / xor / rotate only — no checked
-    arithmetic anywhere (PLANS.md pitfall 4).
-    """
-    exploded = shingle_hash_rows(df, key=key, text_col=text_col, shingle_k=shingle_k)
-    part = exploded.groupBy(
-        "k", F.pmod(F.col("h"), F.lit(num_hashes)).alias("b")
-    ).agg(F.min("h").alias("mn"))
-    m = part.groupBy("k").agg(
-        F.map_from_entries(F.collect_list(F.struct("b", "mn"))).alias("m")
-    )
-    gmin = F.array_min(F.map_values(F.col("m")))
-    sig = F.transform(
-        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-        lambda j: F.coalesce(
-            F.element_at(F.col("m"), j.cast("int")),
-            _rotl64(gmin, 1).bitwiseXOR(j.cast("long")),
-        ),
-    )
-    return m.select("k", sig.alias("sig"))
+def _rows_per_band(num_hashes: int, bands: int) -> int:
+    """Signature positions per LSH band. More bands than hashes would slice
+    every band empty (one bucket for all docs); a remainder would sketch
+    hashes no band reads."""
+    if not 1 <= bands <= num_hashes or num_hashes % bands:
+        raise ValueError(f"bands={bands} must divide num_hashes={num_hashes}")
+    return num_hashes // bands
 
 
 def band_buckets(sigs: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
@@ -451,7 +334,8 @@ def minhash_near_dups(
     Plan: signature (narrow) → explode bands (narrow) → groupBy band-bucket
     (ONE shuffle) → pairs within bucket (collect_list per bucket — buckets are
     tiny by construction) → distinct pairs → exact signature-similarity filter.
-    Returns (key_a, key_b, est_jaccard) with key_a < key_b.
+    Returns (key_a, key_b, est_jaccard) with key_a < key_b. ``bands`` must
+    divide ``num_hashes`` (``ValueError`` otherwise).
 
     ``sigs`` lets a caller that already sketched the corpus (and reuses the
     signatures elsewhere, e.g. the streaming ingest loop) pass the ``(k,
@@ -478,15 +362,12 @@ def minhash_near_dups(
     estimate dips below — and the est stage costs two signature joins per
     candidate set (guide §2.4: remove work whose output is discarded).
     """
-    rows_per_band = num_hashes // bands
+    rows_per_band = _rows_per_band(num_hashes, bands)
     if sigs is not None:
         return _sig_near_dup_pairs(
             sigs, bands, rows_per_band, num_hashes, jaccard_threshold,
             observation=observation, candidates_only=candidates_only,
         )
-    # classic (unbiased) signatures via codegen aggregation — OPH is faster
-    # on long docs but its densification inflates est_jaccard for short
-    # docs (see minhash_sigs_oph's bias warning)
     sigs = minhash_sigs(
         df, key=key, text_col=text_col, num_hashes=num_hashes, shingle_k=shingle_k
     )
@@ -637,7 +518,7 @@ def incremental_near_dups(
     side to Bloom-candidate rows only. Both must come from the same
     (num_hashes, bands, shingle_k) family as the signatures. ``hist_sigs``
     is still required — surviving candidate pairs verify against it."""
-    rows_per_band = num_hashes // bands
+    rows_per_band = _rows_per_band(num_hashes, bands)
     if new_sigs is None:
         new_sigs = minhash_sigs(
             new_df, key=key, text_col=text_col, num_hashes=num_hashes,
@@ -679,53 +560,6 @@ def incremental_near_dups(
     )
 
 
-def simhash_from_hashes(hash_col):
-    """Column expr: 64-bit SimHash (bigint) from pre-computed shingle hashes.
-
-    ONE pass: aggregate maintains a 64-wide vote vector via zip_with(+1/-1
-    per bit), then the finish lambda folds votes into the bigint (bit 63 is
-    the two's-complement sign bit). All codegen; no UDF.
-    """
-    init = F.array(*[F.lit(0) for _ in range(64)])
-
-    def _bitvec(h):
-        return F.array(
-            *[
-                F.when(F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-                for i in range(64)
-            ]
-        )
-
-    def _fold(votes):
-        # disjoint bits — OR, never arithmetic add (ANSI-safe by construction)
-        total = None
-        for i in range(64):
-            bit_val = -(1 << 63) if i == 63 else (1 << i)
-            term = F.when(
-                F.element_at(votes, i + 1) > 0, F.lit(bit_val).cast("long")
-            ).otherwise(F.lit(0).cast("long"))
-            total = term if total is None else total.bitwiseOR(term)
-        return total
-
-    sim = F.aggregate(
-        hash_col,
-        init,
-        lambda acc, h: F.zip_with(acc, _bitvec(h), lambda a, b: a + b),
-        _fold,
-    )
-    return F.when(F.size(hash_col) > 0, sim)
-
-
-def simhash64(text_col: str, shingle_k: int = 3):
-    """Column expr: 64-bit SimHash of word k-shingles, as bigint.
-
-    Convenience composition for small/ad-hoc frames. For bulk pipelines,
-    materialize ``word_hashes`` as its own projection first (see that
-    docstring's O(n²) HOF-inlining caveat) — ``simhash_near_dups`` does.
-    """
-    return simhash_from_hashes(shingle_hashes_from(word_hashes(text_col), shingle_k))
-
-
 def hamming64(a, b):
     """Column expr: Hamming distance between two 64-bit bigints."""
     return F.bit_count(a.bitwiseXOR(b))
@@ -734,10 +568,9 @@ def hamming64(a, b):
 def _simhash_np():
     """Arrow-batched numpy simhash over precomputed shingle-hash arrays.
 
-    Bit-identical to ``simhash_from_hashes``: unpackbits(bitorder='little')
-    on the little-endian int64 view yields exactly bit i = (h >> i) & 1, and
-    bit i of the output is set iff 2·popcount_i > n (⇔ the fold's vote sum
-    > 0, ties → 0).
+    unpackbits(bitorder='little') on the little-endian int64 view yields
+    exactly bit i = (h >> i) & 1, and bit i of the output is set iff
+    2·popcount_i > n (⇔ the spec fold's vote sum > 0, ties → 0).
 
     Deferred factory (not a module-level ``@pandas_udf``): decorating at
     import time resolves the return-type string, which requires an active
@@ -771,7 +604,7 @@ def simhash_sigs(
     shingle_k: int = 3,
 ) -> DataFrame:
     """(k, sh) SimHash table — Arrow-batched numpy popcount, bit-identical to
-    the ``simhash_from_hashes`` Column fold (pinned by
+    the Column vote fold in tests/spec_forms.py (pinned by
     tests/test_dedup.py::test_simhash_sigs_equals_fold_form and the q20
     golden oracle).
 
@@ -783,12 +616,12 @@ def simhash_sigs(
       O(shingles × 64) work per doc (negative result, kept for the record);
     * numpy ``unpackbits`` + column sum over the Arrow batch: **0.54 s** —
       the per-(shingle×bit) op becomes a vectorized memory-bandwidth pass.
-    Unlike minhash (where OPH removes the ×num_hashes factor and stays
-    JVM-side), simhash inherently needs every (shingle, bit) touched — the
+    Unlike minhash, whose per-hash ``min`` aggregates stay JVM-side,
+    simhash inherently needs every (shingle, bit) touched — the
     vectorized batch is the only formulation that makes that cheap.
 
-    Documents with zero shingles are excluded (same contract as the fold
-    form's null signature). Shingle rows come from the explode+lag pipeline
+    Documents with zero shingles are excluded (the fold form's null
+    signature). Shingle rows come from the explode+lag pipeline
     (shingle_hash_rows) and are grouped back into one array per doc with no
     extra exchange (collect_list runs on the window's partitioning)."""
     rows = shingle_hash_rows(df, key=key, text_col=text_col, shingle_k=shingle_k)

@@ -580,6 +580,7 @@ def video_near_dups(
     join is bucketed never all-pairs, and recall at the threshold follows
     the standard (bands, rows-per-band) S-curve (defaults: 1-(1-j⁴)⁸)."""
     from final_ocr_spark.operators.dedup import (
+        _rows_per_band,
         _sig_near_dup_pairs,
         minhash_sigs_from_rows,
     )
@@ -591,5 +592,6 @@ def video_near_dups(
         eager=False  # consumed by banding AND the agreement estimator
     )
     return _sig_near_dup_pairs(
-        sigs, bands, num_hashes // bands, num_hashes, jaccard_threshold
+        sigs, bands, _rows_per_band(num_hashes, bands), num_hashes,
+        jaccard_threshold,
     )

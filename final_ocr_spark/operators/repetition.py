@@ -1,14 +1,15 @@
 """Repetition-based quality signals and line-level corpus cleaning for
 webtext training-data pipelines.
 
-Two classic filter families, re-expressed as pure Spark Column expressions
-(whole-stage codegen, zero shuffle, scan-local — the shape that holds at
-10^12 documents):
+Two classic filter families, scan-local (zero shuffle — the shape that
+holds at 10^12 documents):
 
 * **Gopher repetition signals** (Rae et al. 2021, table A1): duplicate
   line / paragraph fractions, duplicate line / paragraph *character*
   fractions, top-{2,3,4}-gram character fraction, duplicated-{5..10}-gram
-  character fraction.
+  character fraction. Plain-Python kernels over Arrow batches
+  (:func:`repetition_features_udf`, :func:`gopher_keep`); their Column
+  fold spec form is the test oracle in tests/spec_forms.py.
 * **C4 line-level cleaning** (Raffel et al. 2020 §2.2): keep only lines
   that end in terminal punctuation and have >= 5 words, drop lines
   mentioning javascript, flag lorem-ipsum / curly-brace documents, drop
@@ -20,14 +21,6 @@ Design notes (scale + oracle-exactness):
   cross-multiplication (``100 * num <= pct * den``) — no float division,
   no ``round()`` — so a DuckDB oracle matches bit-for-bit (see the
   round()/float-division pitfalls in PLANS.md).
-* Run-length statistics over sorted arrays use a single ``F.aggregate``
-  fold (O(n log n) for the sort, O(n) for the fold). The fold lambda only
-  references its accumulator and element variables, so Catalyst's
-  no-CSE-inside-HOF-lambdas behavior cannot re-evaluate outer arrays per
-  element (the O(n^2) trap documented at dedup.py:shingle_hashes_from).
-* Word n-grams are built by zip_with over *top-level* shifted slices
-  (computed once, subexpression-eliminated), not by per-element slice
-  calls inside a transform lambda.
 
 Reference provenance: the reference repo has no corpus-level quality
 filters (it is a per-document OCR pipeline); these generalize its V9
@@ -46,12 +39,12 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-# Python-side twins of the Column splits below. Java regex ``\s`` is the
-# ASCII set [ \t\n\x0b\f\r] while Python's is Unicode, so every class is
-# spelled out; and Java's non-MULTILINE ``$`` also matches before ONE final
-# line terminator (\r, \n, U+0085, U+2028, U+2029 — only the last three
-# can survive the splits and whitespace classes here), which the lookahead
-# replays.
+# Python-side twins of Spark's regex splits (here and in tests/spec_forms.py).
+# Java regex ``\s`` is the ASCII set [ \t\n\x0b\f\r] while Python's is
+# Unicode, so every class is spelled out; and Java's non-MULTILINE ``$`` also
+# matches before ONE final line terminator (\r, \n, U+0085, U+2028, U+2029 —
+# only the last three can survive the splits and whitespace classes here),
+# which the lookahead replays.
 _JS = " \t\n\x0b\x0c\r"
 _JAVA_EOL = "\x85\u2028\u2029"
 _TRIM = re.compile(f"^[{_JS}]+|[{_JS}]+(?=[{_JAVA_EOL}]?\\Z)")
@@ -66,15 +59,15 @@ def _py_lines(t: str) -> list[str]:
 
 
 def _py_words(t: str) -> list[str]:
-    """:func:`words_of` in plain Python."""
+    """Whitespace-delimited tokens, empties dropped (Java ``\\s+`` split)."""
     return [w for w in _WS_RUN.split(t) if w]
 
 
 def _py_paragraphs(t: str) -> list[str]:
-    """:func:`norm_paragraphs` in plain Python: collapse whitespace runs,
-    then strip ONE leading and ONE trailing space (the anchored alternation
-    can only match one of each), the trailing one also when it precedes a
-    final Java line terminator."""
+    """Paragraphs split on blank lines, empties dropped: collapse whitespace
+    runs, then strip ONE leading and ONE trailing space (the anchored
+    alternation can only match one of each), the trailing one also when it
+    precedes a final Java line terminator."""
     paras = []
     for p in _PARA_SPLIT.split(t):
         p = _WS_RUN.sub(" ", p)
@@ -89,171 +82,12 @@ def _py_paragraphs(t: str) -> list[str]:
     return paras
 
 
-def _zero() -> Column:
-    return F.lit(0).cast("long")
-
-
 def norm_lines(text_col) -> Column:
     """array<string>: lines split on \\r?\\n, whitespace-trimmed (regex — NOT
     F.trim, which strips ASCII spaces only), empties dropped."""
     lines = F.split(text_col, r"\r?\n")
     lines = F.transform(lines, lambda l: F.regexp_replace(l, r"^\s+|\s+$", ""))
     return F.filter(lines, lambda l: l != "")
-
-
-def norm_paragraphs(text_col) -> Column:
-    """array<string>: paragraphs split on blank lines, internal whitespace
-    runs collapsed to single spaces (so re-wrapped duplicates compare
-    equal), empties dropped."""
-    paras = F.split(text_col, r"\n\s*\n")
-    paras = F.transform(
-        paras, lambda p: F.regexp_replace(F.regexp_replace(p, r"\s+", " "), r"^ | $", "")
-    )
-    return F.filter(paras, lambda p: p != "")
-
-
-def words_of(text_col) -> Column:
-    """array<string>: whitespace-delimited tokens, empties dropped."""
-    return F.filter(F.split(text_col, r"\s+"), lambda w: w != "")
-
-
-def word_ngrams(words: Column, n: int) -> Column:
-    """array<string>: word n-grams joined by single spaces.
-
-    Built by folding zip_with over shifted top-level slices — each shift is
-    one array expression evaluated once per row (CSE-able), never a slice
-    inside a per-element lambda.
-    """
-    if n < 1:
-        raise ValueError("n must be >= 1")
-    if n == 1:
-        return words
-    grams = words
-    for k in range(1, n):
-        keep = F.greatest(F.size(words) - k, F.lit(0))
-        shifted = F.slice(words, k + 1, keep)
-        grams = F.zip_with(
-            F.slice(grams, 1, keep), shifted, lambda a, b: F.concat(a, F.lit(" "), b)
-        )
-    return grams
-
-
-def run_stats(arr: Column) -> Column:
-    """struct(dup_chars, best_run, best_chars) over runs of equal strings in
-    ``array_sort(arr)``:
-
-    * ``dup_chars`` — sum over values occurring >= 2 times of
-      occurrences * length(value) (characters inside duplicated values,
-      first occurrence included — the Gopher convention for line/paragraph
-      character fractions).
-    * ``best_run`` — occurrence count of the most frequent value
-      (ties broken toward the lexicographically smallest, which the sorted
-      fold gives for free with a strict ``>``).
-    * ``best_chars`` — best_run * length(that value).
-
-    One O(n) fold; the lambda touches only acc fields and the element.
-    """
-    s = F.array_sort(arr)
-    init = F.struct(
-        F.lit(None).cast("string").alias("prev"),
-        _zero().alias("run"),
-        _zero().alias("dup_chars"),
-        _zero().alias("best_run"),
-        _zero().alias("best_chars"),
-    )
-
-    def flushed(acc):
-        # close out the current run (acc.prev repeated acc.run times)
-        run_chars = acc["run"] * F.coalesce(F.length(acc["prev"]).cast("long"), _zero())
-        dup = acc["dup_chars"] + F.when(acc["run"] >= 2, run_chars).otherwise(_zero())
-        better = acc["run"] > acc["best_run"]
-        best_run = F.when(better, acc["run"]).otherwise(acc["best_run"])
-        best_chars = F.when(better, run_chars).otherwise(acc["best_chars"])
-        return dup, best_run, best_chars
-
-    def merge(acc, x):
-        dup, best_run, best_chars = flushed(acc)
-        same = acc["prev"].isNotNull() & (x == acc["prev"])
-        return F.when(
-            same,
-            F.struct(
-                x.alias("prev"),
-                (acc["run"] + 1).alias("run"),
-                acc["dup_chars"].alias("dup_chars"),
-                acc["best_run"].alias("best_run"),
-                acc["best_chars"].alias("best_chars"),
-            ),
-        ).otherwise(
-            F.struct(
-                x.alias("prev"),
-                F.lit(1).cast("long").alias("run"),
-                dup.alias("dup_chars"),
-                best_run.alias("best_run"),
-                best_chars.alias("best_chars"),
-            )
-        )
-
-    def finish(acc):
-        dup, best_run, best_chars = flushed(acc)
-        return F.struct(
-            dup.alias("dup_chars"),
-            best_run.alias("best_run"),
-            best_chars.alias("best_chars"),
-        )
-
-    return F.aggregate(s, init, merge, finish)
-
-
-def _sum_lengths(arr: Column) -> Column:
-    return F.aggregate(arr, _zero(), lambda acc, x: acc + F.length(x))
-
-
-def repetition_features(
-    text_col,
-    top_ns: tuple[int, ...] = (2, 3, 4),
-    dup_ns: tuple[int, ...] = (5, 6, 7, 8, 9, 10),
-) -> dict[str, Column]:
-    """All-integer repetition counts for one document (Gopher A1 signals).
-
-    Returns Columns keyed:
-      n_chars, n_words,
-      n_lines, n_distinct_lines, dup_line_chars, line_chars,
-      n_paras, n_distinct_paras, dup_para_chars, para_chars,
-      top{n}gram_chars for n in top_ns,
-      dup{n}gram_chars for n in dup_ns.
-
-    Ratios are intentionally NOT returned — compute them downstream, or use
-    :func:`gopher_repetition_checks` which compares integers exactly.
-    """
-    lines = norm_lines(text_col)
-    paras = norm_paragraphs(text_col)
-    words = words_of(text_col)
-    line_stats = run_stats(lines)
-    para_stats = run_stats(paras)
-    out: dict[str, Column] = {
-        "n_chars": F.length(text_col).cast("long"),
-        "n_words": F.size(words).cast("long"),
-        "n_lines": F.size(lines).cast("long"),
-        "n_distinct_lines": F.size(F.array_distinct(lines)).cast("long"),
-        "dup_line_chars": line_stats["dup_chars"],
-        "line_chars": _sum_lengths(lines),
-        "n_paras": F.size(paras).cast("long"),
-        "n_distinct_paras": F.size(F.array_distinct(paras)).cast("long"),
-        "dup_para_chars": para_stats["dup_chars"],
-        "para_chars": _sum_lengths(paras),
-    }
-    for n in top_ns:
-        rs = run_stats(word_ngrams(words, n))
-        # a gram occurring ONCE is not repetition: without the >= 2 gate a
-        # single long 4-gram in a short document trips the 16% threshold
-        # (the signal is meant to catch repeated boilerplate, not existence
-        # of a 4-gram). Pinned here and mirrored in the q39 oracle.
-        out[f"top{n}gram_chars"] = F.when(
-            rs["best_run"] >= 2, rs["best_chars"]
-        ).otherwise(_zero())
-    for n in dup_ns:
-        out[f"dup{n}gram_chars"] = run_stats(word_ngrams(words, n))["dup_chars"]
-    return out
 
 
 # Gopher table A1 thresholds, as integer percents (num/den compared via
@@ -281,8 +115,9 @@ def _frac_le(num: Column, den: Column, pct: int) -> Column:
 
 
 def gopher_repetition_checks(feats: dict[str, Column]) -> dict[str, Column]:
-    """Boolean Gopher repetition checks from :func:`repetition_features`
-    output. All integer arithmetic — engine-independent."""
+    """Boolean Gopher repetition checks from the integer repetition counts
+    (:func:`repetition_features_udf` fields, keyed by name). All integer
+    arithmetic — engine-independent."""
     f = feats
     checks = {
         "dup_line_frac": _frac_le(
@@ -409,9 +244,10 @@ def repetition_features_py(
     top_ns: tuple[int, ...] = (2, 3, 4),
     dup_ns: tuple[int, ...] = (5, 6, 7, 8, 9, 10),
 ) -> dict:
-    """:func:`repetition_features` of one document in plain Python — the
+    """The Gopher repetition counts of one document in plain Python — the
     kernel :func:`repetition_features_udf` wraps. NULL text replays the
-    Column forms' pinned null propagation: array counts are -1
+    Column spec form's (tests/spec_forms.py) pinned null propagation:
+    array counts are -1
     (``size(NULL)``), aggregate folds are NULL, and the top-gram counts are
     0 (their ``when(NULL, ...).otherwise(0)`` falls through)."""
     if not isinstance(t, str):
@@ -448,11 +284,12 @@ def repetition_features_udf(
     top_ns: tuple[int, ...] = (2, 3, 4),
     dup_ns: tuple[int, ...] = (5, 6, 7, 8, 9, 10),
 ):
-    """Arrow-batched twin of :func:`repetition_features` — the SAME integer
-    counts, computed in plain Python per batch instead of ~(2 + len(top_ns)
-    + len(dup_ns)) interpreted sort+fold passes per row (guide §4.2: hand
-    whole batches to native/plain-Python code instead of interpreted JVM
-    higher-order folds). Two wins, both measured on the q39 shape:
+    """The Gopher repetition counts of each document, computed in plain
+    Python per Arrow batch instead of the Column spec form's ~(2 +
+    len(top_ns) + len(dup_ns)) interpreted sort+fold passes per row
+    (tests/spec_forms.py; guide §4.2: hand whole batches to plain-Python
+    code instead of interpreted JVM higher-order folds). Two wins, both
+    measured on the q39 shape:
 
     * **execution**: the Column form burns ~100 core-ms/doc on mixed-length
       web text (string n-gram construction via repeated zip_with concat,
@@ -462,11 +299,10 @@ def repetition_features_udf(
       Catalyst's optimizer passes alone cost ~2 s per query compilation —
       the UDF collapses it to one ArrowEvalPython node.
 
-    Returns a deferred pandas_udf producing ONE struct column with exactly
-    the :func:`repetition_features` keys (all long), computed by
-    :func:`repetition_features_py`. Bit-equality with the Column form is
-    pinned by tests/test_repetition.py's adversarial differential (same
-    corpus as the keep-gate twin).
+    Returns a deferred pandas_udf producing ONE struct column of the
+    ``fields`` below (all long), computed by :func:`repetition_features_py`.
+    Bit-equality with the Column spec form is pinned by
+    tests/test_repetition.py's adversarial differential.
 
     Exactness contract (mirrors :func:`gopher_keep`): Java ``\\s`` is
     ASCII-only, spelled out; paragraph normalization replays the Column
@@ -500,12 +336,11 @@ def gopher_keep(
     dup_ns: tuple[int, ...] = (5, 6, 7, 8, 9, 10),
 ):
     """The Gopher keep verdict of one document in plain Python: the AND of
-    :func:`gopher_repetition_checks` over :func:`repetition_features` (the
-    Column spec form), computed by the kernel that
-    :func:`gopher_repetition_keep_udf` and the corpus gate cascade
-    (operators/gates.py) both call. Checks run cheapest first and return
-    at the first failure; NULL text returns None, the spec fold's NULL
-    verdict, which a filter drops.
+    :func:`gopher_repetition_checks` over the repetition counts, computed by
+    the kernel that :func:`gopher_repetition_keep_udf` and the corpus gate
+    cascade (operators/gates.py) both call. Checks run cheapest first and
+    return at the first failure; NULL text returns None, the spec fold's
+    NULL verdict, which a filter drops.
 
     Semantics notes that make the kernel EXACT, not approximate:
 
@@ -559,12 +394,10 @@ def gopher_repetition_keep_udf(
     dup_ns: tuple[int, ...] = (5, 6, 7, 8, 9, 10),
 ):
     """Arrow-batched Gopher keep gate: the verdict of AND-folding
-    :func:`gopher_repetition_checks` over :func:`repetition_features`,
-    computed by :func:`gopher_keep` per batch instead of the spec form's
-    interpreted higher-order folds per row (this path is the
-    simhash-popcount playbook applied to the densest scan-local gate).
-    Bit-equality with the spec fold is pinned by a differential test over
-    adversarial whitespace/repetition corpora.
+    :func:`gopher_repetition_checks` over the repetition counts, computed
+    by :func:`gopher_keep` per batch (the simhash-popcount playbook applied
+    to the densest scan-local gate). Bit-equality with the spec fold is
+    pinned by a differential test over adversarial corpora.
 
     Deferred factory (module-level ``@pandas_udf`` needs a session)."""
     one = partial(gopher_keep, top_ns=top_ns, dup_ns=dup_ns)

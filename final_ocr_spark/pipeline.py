@@ -47,7 +47,7 @@ to a training-ready corpus, composed from the engine's tested operators.
                           (slim (doc,bucket) shuffle + broadcast weights)
       2c. LM ppl gate     optional CCNet-style Stupid-Backoff bigram-LM
                           perplexity band (broadcast count-table joins)
-      5. near-dup dedup   MinHash-OPH → LSH banding → exact-jaccard verify
+      5. near-dup dedup   MinHash → LSH banding → exact-jaccard verify
                           → connected components → keep min-url per cluster
       5b'. containment    optional winnowing containment dedup — drops docs
                           wholly quoted/mirrored inside another kept doc

@@ -100,6 +100,7 @@ from final_ocr_spark.sources.readers import (
     read_optional as _read_optional,
 )
 from final_ocr_spark.operators.dedup import (
+    _rows_per_band,
     band_buckets,
     incremental_near_dups,
     minhash_near_dups,
@@ -379,7 +380,7 @@ def ingest_batch(
     empty_keys = spark.createDataFrame([], "k string")
     if has_history:
         # -- cross-corpus LSH --------------------------------------------
-        nb = band_buckets(sigs, bands, num_hashes // bands)
+        nb = band_buckets(sigs, bands, _rows_per_band(num_hashes, bands))
         if bucket_bloom is not None:
             stats["lsh_bloom_prefilter"] = True
             # pre-split the batch's bucket rows: rows whose (band, bucket)
@@ -500,7 +501,7 @@ def _cap_stats(
         # the recount is then a no-op-cheap aggregation over zero rows.
         source = "recount"
         row = (
-            band_buckets(sigs, bands, num_hashes // bands)
+            band_buckets(sigs, bands, _rows_per_band(num_hashes, bands))
             .groupBy("band", "bucket")
             .agg(F.count(F.lit(1)).alias("_n"))
             .filter(F.col("_n") > PAIR_BUCKET_CAP)
@@ -683,7 +684,8 @@ def _write_sidecars(
     deterministic function of the survivors)."""
     m_bits, k_hashes = bloom_meta
     buckets = band_buckets(
-        surv_sigs.filter(F.col("sig").isNotNull()), bands, num_hashes // bands
+        surv_sigs.filter(F.col("sig").isNotNull()), bands,
+        _rows_per_band(num_hashes, bands),
     ).localCheckpoint(eager=False)
     # sentinel row (band −1 can never equi-join a real band) keeps this
     # partition VISIBLE even when no survivor had a signature — an empty

@@ -3,6 +3,9 @@
 Usage: python plans/r06/capture.py <before|after> [query ...]
 Run from a tree (repo root on sys.path decides which implementation you
 capture). Writes plans/r06/<query>_<tag>.txt IN THE ROUND-6 REPO.
+The session takes ``get_spark``'s defaults (``local[$SPARK_GRAFT_CPUS]``,
+else every core) and targets repartition to its ``defaultParallelism``,
+so the captured plans are shaped for the host they run on.
 """
 
 from __future__ import annotations
@@ -21,9 +24,9 @@ def main() -> None:
     only = set(sys.argv[2:])
     from final_ocr_spark.session import get_spark
 
-    spark = get_spark(app_name=f"plans-{tag}", master="local[32]",
-                      shuffle_partitions=32)
+    spark = get_spark(app_name=f"plans-{tag}")
     spark.sparkContext.setLogLevel("ERROR")
+    slots = spark.sparkContext.defaultParallelism
     import __spark_entry__ as em
 
     targets = {
@@ -42,7 +45,7 @@ def main() -> None:
             words = F.filter(F.split(F.col("text"), r"\s+"), lambda w: w != "")
             d = (
                 spark.read.parquet(os.path.join(SF, "documents.parquet"))
-                .repartition(32)
+                .repartition(slots)
                 .select("doc_id",
                         F.transform(words, lambda w: F.length(w)).alias("ids"))
             )
@@ -58,7 +61,7 @@ def main() -> None:
             )
             emb = spark.read.parquet(
                 os.path.join(SF, "embeddings.parquet")
-            ).repartition(32)
+            ).repartition(slots)
             # fixed k = max(8, n // 64) for sf0.1's 2,000 embeddings, so
             # building the target runs no job
             return semantic_dedup_kmeans(emb, k=31, threshold=0.97)

@@ -75,7 +75,6 @@ def test_sketches_under_default_ansi_mode(spark, corpus):
     """
     from final_ocr_spark.operators.dedup import (
         minhash_near_dups,
-        simhash64,
         simhash_near_dups,
     )
 
@@ -92,12 +91,6 @@ def test_sketches_under_default_ansi_mode(spark, corpus):
             for r in simhash_near_dups(corpus, max_hamming=6).collect()
         }
         assert (1, 5) in sh
-        # the convenience composition helper must run too (ADVICE round 1:
-        # it referenced an undefined name and was dead-on-arrival)
-        row = corpus.select(simhash64("text").alias("sh")).filter(
-            F.col("sh").isNotNull()
-        )
-        assert row.count() == 5
     finally:
         spark.conf.set("spark.sql.ansi.enabled", old)
 
@@ -143,7 +136,8 @@ def test_simhash_sigs_equals_fold_form(spark):
     """The codegen-aggregation simhash must be BIT-IDENTICAL to the
     interpreted fold form (same vote rule: bit set iff 2*popcount > n)."""
     from final_ocr_spark.operators.dedup import (
-        simhash_from_hashes, simhash_sigs, shingle_hashes_from, word_hashes)
+        simhash_sigs, shingle_hashes_from, word_hashes)
+    from tests.spec_forms import simhash_from_hashes
 
     docs = [(i, f"alpha beta gamma delta {i} epsilon zeta eta theta " * 3)
             for i in range(40)] + [(100, "too short")]
@@ -273,7 +267,8 @@ def test_minhash_sigs_equals_fold_form(spark):
     """Codegen-aggregate minhash must be BIT-IDENTICAL to the classic
     permutation fold (same Mersenne family, same seed stream)."""
     from final_ocr_spark.operators.dedup import (
-        minhash_from_hashes, minhash_sigs, shingle_hashes_from, word_hashes)
+        minhash_sigs, shingle_hashes_from, word_hashes)
+    from tests.spec_forms import minhash_from_hashes
 
     docs = [(i, f"alpha beta gamma delta {i} epsilon zeta eta theta iota " * 2)
             for i in range(25)]
@@ -310,6 +305,26 @@ def test_minhash_short_docs_no_densification_bias(spark):
     sigs = {r["k"]: r["sig"] for r in minhash_sigs(df, num_hashes=64).collect()}
     frac = sum(a == b for a, b in zip(sigs[1], sigs[2])) / 64
     assert 0.1 < frac < 0.6, frac
+
+
+def test_lsh_bands_must_divide_num_hashes(spark, corpus):
+    """More bands than hashes slices every band empty (all docs share one
+    bucket per band); a remainder sketches hashes no band reads. Both entry
+    points refuse such a banding before any Spark job runs."""
+    from final_ocr_spark.operators.dedup import (
+        incremental_near_dups, minhash_near_dups)
+
+    sc = spark.sparkContext
+    sc.setJobGroup("lsh-band-check", "band validation")
+    try:
+        for n, b in [(8, 16), (32, 0), (32, 5)]:
+            with pytest.raises(ValueError, match="bands="):
+                minhash_near_dups(corpus, num_hashes=n, bands=b)
+            with pytest.raises(ValueError, match="bands="):
+                incremental_near_dups(corpus, corpus, num_hashes=n, bands=b)
+        assert sc.statusTracker().getJobIdsForGroup("lsh-band-check") == []
+    finally:
+        sc.setJobGroup(None, None)
 
 
 def test_incremental_near_dups(spark, corpus):

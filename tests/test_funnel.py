@@ -158,12 +158,10 @@ def test_funnel_is_one_pass_no_shuffle(spark):
     a projection SEPARATE from the aggregate, evaluated once per row
     (Catalyst would otherwise re-inline them into every first-fail term;
     measured 17× slower warm)."""
-    from final_ocr_spark.operators.repetition import (
-        gopher_repetition_checks,
-        repetition_features,
-    )
+    from final_ocr_spark.operators.repetition import gopher_repetition_checks
     from final_ocr_spark.operators.text_stats import quality_score
     from final_ocr_spark.plans.funnel import _funnel_agg
+    from tests.spec_forms import repetition_features
 
     docs = _corpus(spark)
     gopher_spec = F.lit(True)

@@ -10,14 +10,15 @@ def _plan(df) -> str:
 
 
 def test_repetition_features_no_exchange(spark):
-    """Gopher repetition metrics are scan-local Column folds — ZERO
+    """Gopher repetition metrics are scan-local — the Arrow counts UDF as
+    q39 applies it (one struct column, fields projected out) adds ZERO
     exchanges (they must ride the extraction scan at 100 TB)."""
-    from final_ocr_spark.operators.repetition import repetition_features
+    from final_ocr_spark.operators.repetition import repetition_features_udf
 
     df = spark.createDataFrame([(1, "a b\nc d\na b")], ["doc_id", "text"])
-    feats = repetition_features(F.col("text"))
-    out = df.select("doc_id", *[c.alias(k) for k, c in feats.items()])
-    assert "Exchange" not in _plan(out)
+    feats = repetition_features_udf(top_ns=(2, 3, 4), dup_ns=(5, 10))
+    plan = _plan(df.withColumn("_f", feats(F.col("text"))).select("doc_id", "_f.*"))
+    assert "ArrowEvalPython" in plan and "Exchange" not in plan
 
 
 def test_deterministic_sample_is_pushed_filter(spark, tmp_path):

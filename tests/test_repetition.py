@@ -2,14 +2,8 @@
 
 from pyspark.sql import functions as F
 
-from final_ocr_spark.operators.repetition import (
-    c4_features,
-    gopher_keep,
-    repetition_features,
-    run_stats,
-    word_ngrams,
-    words_of,
-)
+from final_ocr_spark.operators.repetition import c4_features, gopher_keep
+from tests.spec_forms import repetition_features, run_stats, word_ngrams, words_of
 
 
 def _one(spark, text, cols):
@@ -224,9 +218,7 @@ def test_repetition_features_udf_bit_equal(spark):
 
     from pyspark.sql import functions as SF
 
-    from final_ocr_spark.operators.repetition import (
-        repetition_features, repetition_features_udf,
-    )
+    from final_ocr_spark.operators.repetition import repetition_features_udf
 
     rng = random.Random(77)
     vocab = ["aa", "b", "ccc", "dd", "e", "ffff", "spam", "now",
