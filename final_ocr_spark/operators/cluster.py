@@ -47,6 +47,7 @@ clustering; this operator exists for the LLM-data-pipeline layer
 from __future__ import annotations
 
 import pandas as pd
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 try:  # numpy is part of the pinned environment; guard stays for parity
@@ -179,7 +180,11 @@ def kmeans(
         if rows:
             yield np.asarray(rows, dtype=np.float64)
 
-    mats = work_rows.rdd.mapPartitions(_to_mat).cache()
+    # MEMORY_AND_DISK: a matrix that does not fit in memory spills instead of
+    # being dropped and rebuilt from the checkpoint on every pass
+    mats = work_rows.rdd.mapPartitions(_to_mat).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
     # executor-side combine keeps the driver's merge bounded (≤32 partials
     # of k×dim) at any partition count; consecutive-index association keeps
     # the float sum order FIXED run-to-run (the SQL agg's merge followed

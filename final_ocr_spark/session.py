@@ -11,6 +11,9 @@ ocr2.py:589-597); here the equivalent knobs are Spark confs. We pin:
 * ANSI off: the parsing cascades (SURVEY §2.5 R1-R12) rely on try-semantics —
   a bad date/number yields null, never a task failure (mirrors the reference's
   per-document error swallowing, ocr2.py:549-551).
+* A generated-code cache larger than one pipeline plan: a session that runs
+  the same plan again (a preset per batch, ``ingest_batch`` per micro-batch)
+  compiles each generated class once, not on every run (see ``get_spark``).
 """
 
 from __future__ import annotations
@@ -19,10 +22,22 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Defaults chosen for the sandbox (local[32], 128 GiB). On a real cluster the
-# same builder is used with master/shuffle-partitions overridden by
-# spark-submit conf; nothing here is local-mode-specific.
+# Shuffle partitions when the caller names none; AQE coalesces small
+# shuffles below it. On a cluster the same builder is used with
+# master/shuffle-partitions overridden by spark-submit conf; nothing here is
+# local-mode-specific.
 DEFAULT_SHUFFLE_PARTITIONS = 32
+
+# Entries of Spark's generated-class cache (CodeGenerator.cache, LRU; Spark's
+# default is 100). A plan that compiles more entries than the cache holds
+# evicts each one before its next run asks for it, so every rerun in the
+# session compiles all of them again. Compilations in one run, counted with
+# CodegenMetrics on 4 cores: the fineweb preset over the 3k-doc steadybench
+# input 146; ingest_batch 140 on its first micro-batch and about 300 over six;
+# the 50-query contract (tests/oracle_harness.py) 1,008. 2,000 holds the
+# largest with room. An entry holds about 2.4 classes of 2.3-2.7 KB bytecode
+# (METRIC_GENERATED_CLASS_BYTECODE_SIZE), so a full cache is about 13 MB.
+CODEGEN_CACHE_ENTRIES = 2000
 
 
 def get_spark(
@@ -69,6 +84,8 @@ def get_spark(
         # blob columns make rows heavy; cap scan partitions at 64 MB so one
         # partition of html bytes fits comfortably in an executor core's share
         .config("spark.sql.files.maxPartitionBytes", str(64 * 1024 * 1024))
+        # static conf: takes effect only when this call creates the context
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     if not SparkSession.getActiveSession():
         b = b.master(master)

@@ -195,6 +195,8 @@ def ingest_batch(
     :func:`_repair_sidecars`) — a crash-lost sidecar or a bands change
     costs one repair pass instead of a permanent full-scan path. Set False
     to pin the degraded-but-safe behavior (e.g. read-only stores)."""
+    # refuse a bad banding before any store repair or Spark job runs
+    _rows_per_band(num_hashes, bands)
     spark = batch_df.sparkSession
     # heal any interrupted compaction BEFORE reading history: a half-swapped
     # store is missing partitions, and dedup against it would silently admit

@@ -151,6 +151,59 @@ def test_fineweb_preset_with_wordlist_override(spark):
     assert out == {"https://a.example.com/1"}
 
 
+def test_fineweb_preset_rerun_compiles_no_class(spark):
+    """One fineweb pass generates more Java classes than Spark's default
+    codegen cache holds (``spark.sql.codegen.cache.maxEntries``, 100, LRU),
+    so at that default every rerun in the session recompiles all of them
+    (about 350 compilations here). ``get_spark`` sizes the cache above the
+    pass: a second run of the same plan compiles nothing. The planted
+    near-dup cluster makes the connected-components rounds run.
+
+    AQE is off for this test only: AQE re-plans joins from whichever stage
+    statistics arrive first, so with it on a rerun now and then meets a
+    plan variant (a few classes) that no earlier run compiled. The static
+    plan makes "compiles nothing" exact."""
+    from final_ocr_spark.session import CODEGEN_CACHE_ENTRIES
+
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.sql.codegen.cache.maxEntries") == str(
+        CODEGEN_CACHE_ENTRIES)
+    more = [
+        "The port authority published the revised tide tables for the autumn months.",
+        "Local fishermen welcomed the longer hours at the fuel dock near the pier.",
+        "The ferry operator added two evening crossings for the busy summer weekends.",
+    ]
+    rows = [(f"https://n{i}.example.com/near", [f"{w} {SENT[0]}"] + SENT[1:] + more)
+            for i, w in enumerate(["Today", "Yesterday", "Again"])]
+    rows.append(("https://o.example.com/other", [
+        "Quarterly snowfall totals across the northern ridge exceeded the usual median.",
+        "Wind crusting limited the usable depth reported by the survey teams this week.",
+        "The avalanche center raised its warning level for the upper slopes on Friday.",
+        "Ski patrol closed the north bowl until the new snow had settled properly.",
+    ]))
+    pages = _html_pages(spark, rows)
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME()
+
+    def run():
+        before = compiles.getCount()
+        out = {r["url"] for r in
+               corpus_pipeline_preset(pages, "fineweb").collect()}
+        return out, compiles.getCount() - before
+
+    aqe = "spark.sql.adaptive.enabled"
+    was = spark.conf.get(aqe)
+    spark.conf.set(aqe, "false")
+    try:
+        first, _ = run()
+        again, n_compiled = run()
+    finally:
+        spark.conf.set(aqe, was)
+    assert first == {"https://n0.example.com/near", "https://o.example.com/other"}
+    assert again == first
+    assert n_compiled == 0
+
+
 def test_d4_preset_composes_kmeans_dedup_and_prune(spark):
     base_words = (
         "the committee approved the new harbor dredging budget after a "
