@@ -307,13 +307,16 @@ def test_minhash_short_docs_no_densification_bias(spark):
     assert 0.1 < frac < 0.6, frac
 
 
-def test_lsh_bands_must_divide_num_hashes(spark, corpus):
+def test_lsh_bands_must_divide_num_hashes(spark, corpus, tmp_path):
     """More bands than hashes slices every band empty (all docs share one
-    bucket per band); a remainder sketches hashes no band reads. Both entry
-    points refuse such a banding before any Spark job runs."""
+    bucket per band); a remainder sketches hashes no band reads. Every entry
+    point refuses such a banding before any Spark job runs — ``ingest_batch``
+    also before it repairs or creates its store."""
     from final_ocr_spark.operators.dedup import (
         incremental_near_dups, minhash_near_dups)
+    from final_ocr_spark.streaming.incremental_corpus import ingest_batch
 
+    store = tmp_path / "store"
     sc = spark.sparkContext
     sc.setJobGroup("lsh-band-check", "band validation")
     try:
@@ -322,9 +325,14 @@ def test_lsh_bands_must_divide_num_hashes(spark, corpus):
                 minhash_near_dups(corpus, num_hashes=n, bands=b)
             with pytest.raises(ValueError, match="bands="):
                 incremental_near_dups(corpus, corpus, num_hashes=n, bands=b)
+            with pytest.raises(ValueError, match="bands="):
+                ingest_batch(corpus, 0, str(store / "corpus"),
+                             str(store / "sigs"), key="doc_id",
+                             text_col="text", num_hashes=n, bands=b)
         assert sc.statusTracker().getJobIdsForGroup("lsh-band-check") == []
     finally:
         sc.setJobGroup(None, None)
+    assert not store.exists()
 
 
 def test_incremental_near_dups(spark, corpus):

@@ -176,29 +176,6 @@ def test_ingest_batch_guards_and_first_wins(spark, tmp_path):
         ingest_batch(b1, 2, corpus, sigs, num_hashes=64, bands=8)
 
 
-def test_ingest_batch_refuses_bad_banding_before_any_job(spark, tmp_path):
-    """A banding that ``minhash_near_dups`` would refuse fails before
-    ``ingest_batch`` repairs the store or counts the batch: no Spark job runs
-    and no store directory is created."""
-    import pytest
-
-    from final_ocr_spark.streaming.incremental_corpus import ingest_batch
-
-    corpus, sigs = tmp_path / "corpus", tmp_path / "sigs"
-    b0 = _docs_df(spark, [("http://x/a", _BASE), ("http://x/b", _OTHER)])
-    sc = spark.sparkContext
-    sc.setJobGroup("ingest-band-check", "band validation")
-    try:
-        for n, b in [(32, 5), (8, 16)]:
-            with pytest.raises(ValueError, match="bands="):
-                ingest_batch(b0, 0, str(corpus), str(sigs),
-                             num_hashes=n, bands=b)
-        assert sc.statusTracker().getJobIdsForGroup("ingest-band-check") == []
-    finally:
-        sc.setJobGroup(None, None)
-    assert not corpus.exists() and not sigs.exists()
-
-
 def test_ingest_batch_within_batch_pick_is_deterministic(spark):
     """Same key twice in one batch: the kept text is the one with the
     smaller (xxhash64(text), text) — a pure function of the rows, not of
