@@ -33,7 +33,7 @@ DEFAULT_SHUFFLE_PARTITIONS = 32
 # evicts each one before its next run asks for it, so every rerun in the
 # session compiles all of them again. Compilations in one run, counted with
 # CodegenMetrics on 4 cores: the fineweb preset over the 3k-doc steadybench
-# input 146; ingest_batch 140 on its first micro-batch and about 300 over six;
+# input 146; ingest_batch 123 on its first 500-doc micro-batch, 283 over six;
 # the 50-query contract (tests/oracle_harness.py) 1,008. 2,000 holds the
 # largest with room. An entry holds about 2.4 classes of 2.3-2.7 KB bytecode
 # (METRIC_GENERATED_CLASS_BYTECODE_SIZE), so a full cache is about 13 MB.
