@@ -259,7 +259,14 @@ def minhash_sigs_from_rows(
     shingles: video frame perceptual hashes (multimodal.video_near_dups),
     outlink sets, any (key, 64-bit element) table. Same Mersenne-31
     family, same seed stream, bit-identical to the text path (which now
-    delegates here)."""
+    delegates here).
+
+    Each aggregate is ONE ``F.expr`` string, not a tree of ~9 Column
+    calls: every Column call is a py4j round trip (with PySpark 4's
+    call-site capture), so building 32 aggregates that way took 340-410 ms
+    of driver time per call before any job ran, against 80-120 ms as
+    strings (4 cores). The parsed expression is the same, with the same
+    ``CAST ... AS BIGINT`` operands."""
     import random
 
     rng = random.Random(seed)
@@ -267,19 +274,16 @@ def minhash_sigs_from_rows(
         (rng.randrange(1, _MERSENNE31), rng.randrange(0, _MERSENNE31))
         for _ in range(num_hashes)
     ]
-    p = F.lit(_MERSENNE31).cast("long")
-    x = F.pmod(F.col("h"), p)
+    p = f"CAST({_MERSENNE31} AS BIGINT)"
     aggs = [
-        F.min(F.pmod(F.lit(a).cast("long") * x + F.lit(b).cast("long"), p)).alias(f"_m{i}")
+        F.expr(
+            f"min(pmod(CAST({a} AS BIGINT) * pmod(h, {p}) + CAST({b} AS BIGINT), {p}))"
+            f" AS _m{i}"
+        )
         for i, (a, b) in enumerate(coeffs)
     ]
-    return (
-        rows.groupBy("k")
-        .agg(*aggs)
-        .select(
-            "k", F.array(*[F.col(f"_m{i}") for i in range(num_hashes)]).alias("sig")
-        )
-    )
+    sig = ", ".join(f"_m{i}" for i in range(num_hashes))
+    return rows.groupBy("k").agg(*aggs).selectExpr("k", f"array({sig}) AS sig")
 
 
 def _rows_per_band(num_hashes: int, bands: int) -> int:
@@ -687,16 +691,21 @@ def dedup_clusters(
     Same output contract, same determinism, converges in fewer rounds on
     long paths (pinned by test_dedup_clusters_star_long_path).
 
+    Both algorithms read ``pairs`` exactly ONCE: the symmetric edge list
+    is built in one pass (:func:`_symmetric_edges`) and checkpointed, and
+    everything else (labels, star's oriented edges and node set) derives
+    from it. ``pairs`` is typically the unmaterialized exact-Jaccard
+    verify, the largest stage of a fineweb pass, which a second read
+    would run again (pinned per row by
+    test_dedup_clusters_evaluates_each_pair_once).
+
     ``_stats`` (optional dict) receives {"rounds": n} for instrumentation.
     """
     if algorithm == "star":
         return _dedup_clusters_star(pairs, key_a, key_b, max_iters, _stats)
     if algorithm != "jump":
         raise ValueError(f"unknown algorithm {algorithm!r}; use 'jump' or 'star'")
-    edges = pairs.select(F.col(key_a).alias("a"), F.col(key_b).alias("b"))
-    edges = edges.unionByName(
-        edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).distinct().localCheckpoint(eager=False)
+    edges = _symmetric_edges(pairs, key_a, key_b).localCheckpoint(eager=False)
     labels = (
         edges.select(F.col("a").alias("k")).distinct()
         .withColumn("label", F.col("k"))
@@ -752,6 +761,31 @@ def dedup_clusters(
     return labels.select(F.col("k").alias("key"), F.col("label").alias("cluster_id"))
 
 
+def _symmetric_edges(pairs: DataFrame, key_a: str, key_b: str) -> DataFrame:
+    """Distinct (a, b) edges in both directions, from ONE read of ``pairs``.
+
+    ``pairs`` is usually the unmaterialized exact-Jaccard verify. A
+    ``Union`` of two projections of it (``edges ∪ swap(edges)``) runs that
+    whole non-exchange chain once per branch — exchange reuse shares only
+    the shuffles and broadcasts underneath, so the plan hides the second
+    run (PLANS.md pitfall 7). Exploding a two-element array per row emits
+    both directions from a single evaluation. Self-pairs (a == b) stay.
+    """
+    a, b = F.col(key_a), F.col(key_b)
+    return (
+        pairs.select(
+            F.explode(
+                F.array(
+                    F.struct(a.alias("a"), b.alias("b")),
+                    F.struct(b.alias("a"), a.alias("b")),
+                )
+            ).alias("_e")
+        )
+        .select("_e.a", "_e.b")
+        .distinct()
+    )
+
+
 def _dedup_clusters_star(
     pairs: DataFrame, key_a: str, key_b: str, max_iters: int,
     _stats: dict | None = None,
@@ -778,15 +812,13 @@ def _dedup_clusters_star(
     collision probability ~2⁻¹²⁸ per round, negligible against task-retry
     nondeterminism risk.
     """
-    edges = (
-        pairs.select(F.col(key_a).alias("a"), F.col(key_b).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .select(
-            F.greatest("a", "b").alias("a"), F.least("a", "b").alias("b")
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    # ONE read of `pairs` (see _symmetric_edges): both the oriented edge
+    # set and the node set come from this table. It holds both directions
+    # of every pair, so `a > b` keeps each non-self pair once, oriented
+    # toward the smaller id, already distinct; self-pairs drop out of the
+    # edges but stay nodes.
+    sym = _symmetric_edges(pairs, key_a, key_b).localCheckpoint(eager=False)
+    edges = sym.filter(F.col("a") > F.col("b"))
 
     def _fingerprint(e: DataFrame):
         # bit_xor, not sum: summing full-range xxhash64 longs overflows and
@@ -859,11 +891,7 @@ def _dedup_clusters_star(
         _stats["rounds"] = rounds
     # At convergence every edge is (node → component min). Roots point at
     # themselves; singletons never appear in `pairs` (same contract as jump).
-    nodes = (
-        pairs.select(F.col(key_a).alias("key"))
-        .unionByName(pairs.select(F.col(key_b).alias("key")))
-        .distinct()
-    )
+    nodes = sym.select(F.col("a").alias("key")).distinct()
     return (
         nodes.join(
             edges.select(F.col("a").alias("key"), F.col("b").alias("cid")),
@@ -939,14 +967,25 @@ def ngram_jaccard_pairs(
       P(hash collision flipping a set size) ≈ |shingles|²/2^65 ≈ 1e-13 per
       pair — far below any meaningful threshold granularity).
     Jaccard = |intersect| / |union| via array_intersect/union.
+
+    The verify's cost is per ROW — two hash-set builds over a few hundred
+    grams per pair — but its input is small in BYTES (the fineweb
+    benchmark's 24k candidate pairs are ~2.4 MB out of a ``distinct()``),
+    and AQE sizes post-shuffle partitions by bytes: it coalesced them to
+    1-2 tasks on a 4-core host. The pairs are therefore round-robin
+    repartitioned to ``defaultParallelism`` (local mode: the core count;
+    on a cluster: the total executor cores) before the two set joins — a
+    ``REPARTITION_BY_NUM`` exchange, which AQE never coalesces. Measured
+    on that input, 4 cores, one warm pass each: 1 task 1.7 s wall, 4
+    tasks 0.82 s, 32 tasks 1.02 s (and 60 % more CPU than at 4).
+    The pair keys are read once (``explode``), never as a ``Union`` of two
+    projections, which runs an unmaterialized ``pairs`` twice (PLANS.md
+    pitfall 7).
     """
-    # no .distinct() on the key union: a LEFT SEMI probe side dedups in its
-    # own hash table, so the pre-aggregation bought nothing but one more
+    # no .distinct() on the needed keys: a LEFT SEMI probe side dedups in
+    # its own hash table, so the pre-aggregation bought nothing but one more
     # exchange + aggregate (r6 job-count audit)
-    needed = (
-        pairs.select(F.col("key_a").alias("k"))
-        .unionByName(pairs.select(F.col("key_b").alias("k")))
-    )
+    needed = pairs.select(F.explode(F.array("key_a", "key_b")).alias("k"))
     pruned = df.join(needed, df[key] == needed["k"], "left_semi")
     # two projections: materialize word hashes before the shingle fold (no
     # CSE inside HOF lambdas — see word_hashes)
@@ -954,8 +993,9 @@ def ngram_jaccard_pairs(
     sets = wordsh.select(
         "k", F.array_distinct(shingle_hashes_from(F.col("wh"), n)).alias("grams")
     )
+    spread = pairs.repartition(pairs.sparkSession.sparkContext.defaultParallelism)
     return (
-        pairs.join(sets.withColumnRenamed("k", "key_a").withColumnRenamed("grams", "ga"), "key_a")
+        spread.join(sets.withColumnRenamed("k", "key_a").withColumnRenamed("grams", "ga"), "key_a")
         .join(sets.withColumnRenamed("k", "key_b").withColumnRenamed("grams", "gb"), "key_b")
         .select(
             "key_a",

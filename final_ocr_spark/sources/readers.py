@@ -47,17 +47,27 @@ def read_optional(
     """Read a parquet path that may legitimately not exist yet (sidecars,
     incremental stores), returning None for ONLY path-not-found.
 
-    Read-and-catch, NOT a local-filesystem listing — paths are HDFS/S3 URIs
-    on a real cluster. Any other analysis failure (corrupt store,
+    Existence is asked of the path's Hadoop ``FileSystem`` (paths are
+    HDFS/S3 URIs on a real cluster) BEFORE any read: a failed read also
+    reaches every query execution listener, and once an ``Observation`` is
+    registered Spark's ``ObservationManager`` logs a ~100-line
+    ``PATH_NOT_FOUND`` trace at ERROR for it. ``path`` is a plain path, not
+    a glob. The read still catches path-not-found (the store can vanish
+    between the check and the read). Any other failure (corrupt store,
     permissions) must fail loudly, not silently skip the consumer's logic:
-    every caller treats None as "store absent", and swallowing a corruption
-    error here would turn it into silent data loss (e.g. skipped dedup).
+    every caller treats None as "store absent", and swallowing a
+    corruption error here would turn it into silent data loss (e.g.
+    skipped dedup).
 
     With ``schema`` the read is schema-pinned (absent columns surface as a
     loud mismatch downstream, never as inference drift); without it the
     footer schema is used (for self-describing sidecars like _meta)."""
     from pyspark.errors import AnalysisException
 
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    hconf = spark._jsparkSession.sessionState().newHadoopConf()
+    if not hpath.getFileSystem(hconf).exists(hpath):
+        return None
     try:
         rd = spark.read.schema(schema) if schema is not None else spark.read
         return rd.parquet(path)

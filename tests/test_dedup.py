@@ -223,6 +223,30 @@ def test_dedup_clusters_random_graph_fuzz(spark):
     assert star == want
 
 
+@pytest.mark.parametrize("algorithm", ["jump", "star"])
+def test_dedup_clusters_evaluates_each_pair_once(spark, algorithm):
+    """The pairs fed to dedup_clusters are usually the unmaterialized
+    exact-Jaccard verify, so each pair row must be evaluated ONCE: a Union
+    of two projections of the pairs ran jump's verify twice and star's
+    three times. A pass-through Python UDF counts the evaluations. The
+    self-pair (4, 4) stays a singleton cluster in both algorithms."""
+    from final_ocr_spark.operators.dedup import dedup_clusters
+
+    calls = spark.sparkContext.accumulator(0)
+
+    def seen(k):
+        calls.add(1)
+        return k
+
+    rows = [(1, 2), (2, 3), (7, 9), (4, 4)]
+    pairs = spark.createDataFrame(rows, ["key_a", "key_b"]).select(
+        F.udf(seen, "long")("key_a").alias("key_a"), "key_b")
+    got = {r["key"]: r["cluster_id"]
+           for r in dedup_clusters(pairs, algorithm=algorithm).collect()}
+    assert got == {1: 1, 2: 1, 3: 1, 4: 4, 7: 7, 9: 7}
+    assert calls.value == len(rows)
+
+
 def test_dedup_clusters_star_basic(spark):
     from final_ocr_spark.operators.dedup import dedup_clusters
 

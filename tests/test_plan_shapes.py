@@ -259,3 +259,29 @@ def test_fineweb_gates_are_one_python_map(spark, monkeypatch):
     assert "Exchange hashpartitioning(url#" in plan  # dedup_latest's
     assert "EvalPython" not in plan
     assert above.count("MapInArrow") == 1 and "MapInPandas" not in above
+
+
+def test_ngram_jaccard_verify_spreads_pairs_and_reads_them_once(spark):
+    """The exact-Jaccard verify costs per row but is small in bytes, so
+    AQE's byte-sized coalescing would squeeze it onto 1-2 tasks: the pairs
+    go through exactly one REPARTITION_BY_NUM exchange (never coalesced)
+    below the Jaccard projection. The needed-key list reads the pairs in
+    one explode, so the executed plan has no Union (which would run an
+    unmaterialized pair table twice)."""
+    from final_ocr_spark.operators.dedup import ngram_jaccard_pairs
+
+    docs = spark.createDataFrame(
+        [(i, f"w{i} alpha beta gamma delta epsilon zeta") for i in range(6)],
+        ["doc_id", "text"])
+    cand = spark.createDataFrame(
+        [(0, 1), (2, 3), (4, 5), (0, 1)], ["key_a", "key_b"]).distinct()
+    out = ngram_jaccard_pairs(docs, cand, n=3)
+    assert len(out.collect()) == 3
+    plan = _plan(out)
+    assert "isFinalPlan=true" in plan
+    final = plan.split("== Initial Plan ==")[0].splitlines()
+    proj = next(i for i, line in enumerate(final)
+                if line.lstrip(" +-:*()0123456789").startswith("Project")
+                and "jaccard" in line)
+    assert "\n".join(final[proj + 1:]).count("REPARTITION_BY_NUM") == 1
+    assert "Union" not in plan

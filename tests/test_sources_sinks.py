@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import pathlib
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -57,3 +58,31 @@ def test_canonicalize_text(spark):
     df = spark.createDataFrame([("Deil  Desktop | fast PC  ",)], ["t"])
     got = df.select(canonicalize_text(F.col("t")).alias("c")).collect()[0]["c"]
     assert got == "Dell Desktop I fast PC"
+
+
+def test_read_optional_absent_is_none_and_corrupt_raises(spark, tmp_path, monkeypatch):
+    """A missing store is None WITHOUT a failing read (a failed read is
+    logged as a long ERROR trace by Spark's ObservationManager listener
+    once an Observation is registered); a present store reads; a corrupt
+    store still raises instead of reading as absent."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from final_ocr_spark.sources.readers import read_optional
+
+    good = str(tmp_path / "good")
+    spark.createDataFrame([(1,)], ["k"]).write.parquet(good)
+    assert read_optional(spark, good, "k long").collect()[0]["k"] == 1
+
+    def no_read(self, *paths, **kw):
+        raise AssertionError(f"read attempted for {paths}")
+
+    with monkeypatch.context() as m:
+        m.setattr(DataFrameReader, "parquet", no_read)
+        assert read_optional(spark, str(tmp_path / "missing")) is None
+        assert read_optional(spark, str(tmp_path / "missing"), "k long") is None
+
+    bad = tmp_path / "bad"
+    bad.mkdir()
+    (bad / "part-00000.parquet").write_bytes(b"this is not a parquet file")
+    with pytest.raises(Exception, match="(?i)parquet"):
+        read_optional(spark, str(bad))
