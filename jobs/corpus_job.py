@@ -12,11 +12,16 @@ Example (cluster):
 
 Local smoke:
     python jobs/corpus_job.py --synthetic 2000 --output /tmp/corpus_demo
+
+The pipeline flags have no defaults of their own: a flag left unset takes
+``corpus_pipeline``'s value, or the ``--preset``'s. Only the flags typed on
+the command line reach the call (and, with a preset, override it).
 """
 
 from __future__ import annotations
 
 import argparse
+import inspect
 import os
 import pathlib
 import sys
@@ -30,67 +35,69 @@ os.environ["PYTHONPATH"] = _REPO + os.pathsep + os.environ.get("PYTHONPATH", "")
 
 
 def _build_parser() -> argparse.ArgumentParser:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--preset", default=None,
-                    help="start from a published-recipe preset (c4, gopher, "
-                         "ccnet, refinedweb, fineweb, dolma, d4 — see "
+    from final_ocr_spark.presets import PRESETS
+    from jobs._cli import band_type, langs_type
+
+    # pipeline flags default to SUPPRESS: an unset flag is absent from the
+    # namespace, so the pipeline's (or the preset's) value applies; the
+    # job-level flags give their defaults explicitly
+    ap = argparse.ArgumentParser(argument_default=argparse.SUPPRESS)
+    ap.add_argument("--preset", default=None, choices=sorted(PRESETS),
+                    help="start from a published-recipe preset (see "
                          "final_ocr_spark.presets); explicitly-passed flags "
                          "override the preset, unset flags keep its values")
-    ap.add_argument("--input", help="pages parquet path")
+    ap.add_argument("--input", default=None, help="pages parquet path")
     ap.add_argument("--synthetic", type=int, default=0,
                     help="generate N synthetic pages instead of --input")
     ap.add_argument("--output", required=True)
-    ap.add_argument("--min-quality", type=float, default=50.0)
+    ap.add_argument("--min-quality", type=float)
     # BooleanOptionalAction emits BOTH --x and --no-x, so every boolean
     # stage can be explicitly forced either way over a --preset (a bare
     # store_true can only assert, making "preset minus one stage"
-    # inexpressible — review-caught); --no-gopher etc. keep working
-    ap.add_argument("--gopher", action=argparse.BooleanOptionalAction,
-                    default=True)
-    ap.add_argument("--redact", action=argparse.BooleanOptionalAction,
-                    default=True)
-    ap.add_argument("--near-dup", action=argparse.BooleanOptionalAction,
-                    default=True)
+    # inexpressible); --no-gopher etc. keep working
+    ap.add_argument("--gopher", action=argparse.BooleanOptionalAction)
+    ap.add_argument("--redact", action=argparse.BooleanOptionalAction)
+    ap.add_argument("--near-dup", action=argparse.BooleanOptionalAction)
     ap.add_argument("--neardup-keep-best", action=argparse.BooleanOptionalAction,
-                    default=False,
                     help="near-dup survivors are the highest-quality cluster "
                          "member instead of the min-key one")
-    ap.add_argument("--jaccard", type=float, default=0.85)
-    ap.add_argument("--host-cap", type=int, default=None)
-    ap.add_argument("--sample-rate", type=float, default=None)
-    ap.add_argument("--sample-salt", default="corpus")
-    ap.add_argument("--temperature-alpha", type=float, default=None,
+    ap.add_argument("--jaccard", type=float, dest="jaccard_threshold",
+                    metavar="JACCARD")
+    ap.add_argument("--host-cap", type=int)
+    ap.add_argument("--sample-rate", type=float)
+    ap.add_argument("--sample-salt")
+    ap.add_argument("--temperature-alpha", type=float,
                     help="XLM/mT5 alpha-sampling over --temperature-group as "
                          "the final stage: group share ∝ (corpus share)^alpha "
                          "(0=uniform target, 1=keep natural shares)")
-    ap.add_argument("--temperature-group", default="lang",
+    ap.add_argument("--temperature-group",
                     help="column the temperature reweighting groups on "
                          "(default lang; NULLs group as 'und')")
     ap.add_argument("--cluster-algorithm", choices=["jump", "star"],
-                    default="jump",
                     help="near-dup connected components: jump = min-label+"
                          "pointer-jumping (dense graphs), star = large-star/"
                          "small-star (path-shaped/huge graphs)")
-    ap.add_argument("--partitions", type=int, default=None)
+    ap.add_argument("--partitions", type=int, dest="extract_partitions",
+                    metavar="PARTITIONS")
     ap.add_argument("--seed", type=int, default=42)
-    ap.add_argument("--blocked-domains", default=None,
+    ap.add_argument("--blocked-domains",
                     help="file with one registered domain per line, filtered "
                          "before extraction (broadcast anti-join)")
-    ap.add_argument("--url-patterns", action=argparse.BooleanOptionalAction, default=False,
+    ap.add_argument("--url-patterns", action=argparse.BooleanOptionalAction,
                     help="enable the pinned default URL hygiene patterns")
-    ap.add_argument("--sentence-dedup", type=int, default=None,
-                    metavar="MIN_CHARS",
+    ap.add_argument("--sentence-dedup", type=int,
+                    dest="sentence_dedup_min_chars", metavar="MIN_CHARS",
                     help="corpus-level repeated-sentence removal for "
                          "sentences of at least MIN_CHARS chars "
                          "(syndicated ledes)")
-    ap.add_argument("--mime-gate", action=argparse.BooleanOptionalAction, default=False,
+    ap.add_argument("--mime-gate", action=argparse.BooleanOptionalAction,
                     help="drop media/archive payloads by magic bytes "
                          "before extraction")
-    ap.add_argument("--fix-mojibake", action=argparse.BooleanOptionalAction, default=False,
+    ap.add_argument("--fix-mojibake", action=argparse.BooleanOptionalAction,
                     help="repair UTF-8-as-cp1252/latin-1 mis-decoded text "
                          "before the quality gates")
-    ap.add_argument("--paragraph-dedup", type=int, default=None,
-                    metavar="MIN_CHARS",
+    ap.add_argument("--paragraph-dedup", type=int,
+                    dest="paragraph_dedup_min_chars", metavar="MIN_CHARS",
                     help="corpus-level repeated-paragraph removal for "
                          "paragraphs of at least MIN_CHARS chars")
     ap.add_argument("--tables-output", default=None,
@@ -109,85 +116,87 @@ def _build_parser() -> argparse.ArgumentParser:
                          "outlinks) from the RAW input pages as WAT-style "
                          "WARC metadata records at this directory (same "
                          "shared-filesystem requirement as --wet-output)")
-    ap.add_argument("--host-boilerplate", type=float, default=None,
-                    metavar="RATIO",
+    ap.add_argument("--host-boilerplate", type=float,
+                    dest="host_boilerplate_ratio", metavar="RATIO",
                     help="remove lines occurring on >= RATIO of a host's "
                          "pages (site nav/footer chrome; zero copies kept)")
-    ap.add_argument("--span-dedup", type=int, default=None,
+    ap.add_argument("--span-dedup", type=int, dest="span_dedup_gram_n",
                     metavar="GRAM_N",
                     help="duplicated-span removal (Lee et al. 2022): drop "
                          "every non-first occurrence of any duplicated span "
                          "of at least GRAM_N tokens (50 is the standard)")
     ap.add_argument("--warc-input", default=None,
                     help="directory of WARC(.gz) archives instead of --input")
-    ap.add_argument("--containment", type=float, default=None,
-                    metavar="THRESHOLD",
+    ap.add_argument("--containment", type=float,
+                    dest="containment_threshold", metavar="THRESHOLD",
                     help="winnowing containment dedup: drop docs whose "
                          "fingerprints are >= THRESHOLD contained in "
                          "another kept doc")
-    ap.add_argument("--classifier-weights", default=None,
+    ap.add_argument("--classifier-weights",
                     help="parquet (b, weight) table from "
                          "classify.train_ngram_nb; enables the model "
                          "quality gate")
-    ap.add_argument("--classifier-threshold", type=float, default=0.5)
-    ap.add_argument("--classifier-features", type=int, default=1 << 18,
+    ap.add_argument("--classifier-threshold", type=float)
+    ap.add_argument("--classifier-features", type=int,
+                    dest="classifier_n_features",
+                    metavar="CLASSIFIER_FEATURES",
                     help="hashed feature space size; MUST match training")
-    ap.add_argument("--lm-table", default=None,
+    ap.add_argument("--lm-table",
                     help="parquet (h, n, is_bigram) table from "
                          "lm.train_bigram_lm; enables the perplexity gate")
-    ap.add_argument("--lm-max-ppl", type=float, default=None,
+    ap.add_argument("--lm-max-ppl", type=float,
                     help="keep docs with lm_ppl <= this (requires --lm-table)")
-    ap.add_argument("--drop-noindex", action=argparse.BooleanOptionalAction, default=False,
+    ap.add_argument("--drop-noindex", action=argparse.BooleanOptionalAction,
                     help="drop pages whose head metadata says robots noindex "
                          "(cheap prescan before full extraction)")
-    ap.add_argument("--respect-canonical", action=argparse.BooleanOptionalAction, default=False,
+    ap.add_argument("--respect-canonical", action=argparse.BooleanOptionalAction,
                     help="also drop pages declaring a canonical url "
                          "different from their own")
-    ap.add_argument("--robots", default=None,
+    ap.add_argument("--robots",
                     help="parquet (host, robots_txt) table; enables the "
                          "robots.txt compliance gate before extraction")
-    ap.add_argument("--robots-agent", default="*",
+    ap.add_argument("--robots-agent",
                     help="user-agent evaluated against the robots rules")
-    ap.add_argument("--semantic-threshold", type=float, default=None,
+    ap.add_argument("--semantic-threshold", type=float,
                     help="enable SemDeDup-style embedding-space dedup at "
                          "this cosine threshold (stage 5c)")
     ap.add_argument("--semantic-method", choices=["lsh", "kmeans"],
-                    default="lsh",
                     help="semantic dedup blocking: seeded hyperplane LSH "
                          "(default) or the paper-faithful k-means variant")
-    ap.add_argument("--semantic-k", type=int, default=None,
+    ap.add_argument("--semantic-k", type=int,
                     help="k for --semantic-method kmeans (default: corpus "
                          "size / --semantic-cluster-size, the scale-safe "
                          "n-proportional choice)")
-    ap.add_argument("--prototype-prune", type=float, default=None,
+    ap.add_argument("--prototype-prune", type=float,
+                    dest="prototype_prune_frac", metavar="PROTOTYPE_PRUNE",
                     help="drop this fraction of the most-prototypical docs "
                          "per k-means cluster (SSP stage 5d; with "
                          "--semantic-method kmeans this is the D4 recipe)")
-    ap.add_argument("--prototype-k", type=int, default=None,
+    ap.add_argument("--prototype-k", type=int,
                     help="k for the prototype-pruning clustering "
                          "(default: corpus size / --semantic-cluster-size)")
-    ap.add_argument("--semantic-cluster-size", type=int, default=1024,
+    ap.add_argument("--semantic-cluster-size", type=int,
                     help="expected docs per cluster used to derive the "
                          "kmeans k defaults")
-    ap.add_argument("--lang-allow", default=None, metavar="LANGS",
+    ap.add_argument("--lang-allow", type=langs_type, metavar="LANGS",
                     help="comma-separated language codes to keep "
                          "(e.g. 'en' or 'en,fr')")
-    ap.add_argument("--lang-detect", action=argparse.BooleanOptionalAction, default=False,
+    ap.add_argument("--lang-detect", action=argparse.BooleanOptionalAction,
                     help="re-detect language from the extracted text "
                          "(n-gram heuristic) instead of trusting the "
                          "declared lang column")
-    ap.add_argument("--c4-line-clean", action=argparse.BooleanOptionalAction, default=False,
+    ap.add_argument("--c4-line-clean", action=argparse.BooleanOptionalAction,
                     help="C4 line rules + doc gates (Raffel et al. 2020 "
                          "§2.2) before quality scoring")
-    ap.add_argument("--c4-min-lines", type=int, default=3,
+    ap.add_argument("--c4-min-lines", type=int,
                     help="C4 doc gate: minimum kept lines (use 1 for "
                          "pre-collapsed text-passthrough corpora)")
-    ap.add_argument("--flagged-wordlist", default=None, metavar="FILE",
+    ap.add_argument("--flagged-wordlist", metavar="FILE",
                     help="file with one flagged token per line; drops docs "
                          "whose flagged-token ratio exceeds "
                          "--flagged-max-ratio (policy list is yours, never "
                          "baked in)")
-    ap.add_argument("--flagged-max-ratio", type=float, default=0.01)
+    ap.add_argument("--flagged-max-ratio", type=float)
     ap.add_argument("--jsonl-output", default=None, metavar="DIR",
                     help="also export the corpus as gzip JSONL shards with "
                          "a checksummed manifest (the Dolma/FineWeb release "
@@ -195,35 +204,29 @@ def _build_parser() -> argparse.ArgumentParser:
     ap.add_argument("--jsonl-shards", type=int, default=None,
                     help="pin the JSONL shard count (default: let the "
                          "range exchange decide)")
-    from jobs._cli import band_type
-
-    ap.add_argument("--compression-band", default=None, metavar="LO:HI",
-                    type=band_type,
+    ap.add_argument("--compression-band", metavar="LO:HI", type=band_type,
                     help="keep docs whose zlib compression ratio lies in "
                          "[LO, HI] (e.g. 0.2:0.95) — drops over-compressible "
                          "template spam and incompressible noise")
     return ap
 
 
+def _pipeline_flags(args: argparse.Namespace) -> dict:
+    """The typed flags that are ``corpus_pipeline`` parameters, by kwarg
+    name. Unset pipeline flags are absent from ``args``, so this is exactly
+    what overrides the preset (or the signature's defaults)."""
+    from final_ocr_spark.pipeline import corpus_pipeline
+
+    params = inspect.signature(corpus_pipeline).parameters
+    return {k: v for k, v in vars(args).items() if k in params}
+
+
 def main() -> None:
     ap = _build_parser()
     args = ap.parse_args()
-    # Which flags did the user actually type? A second parse with every
-    # default suppressed leaves only explicitly-provided dests — that is
-    # the set allowed to override a --preset (argparse cannot distinguish
-    # "passed the default value" from "not passed" in one parse).
-    aux = _build_parser()
-    for action in aux._actions:
-        action.default = argparse.SUPPRESS
-    provided = set(vars(aux.parse_args()))
-    if (args.lm_table is None) != (args.lm_max_ppl is None):
+    typed = _pipeline_flags(args)
+    if ("lm_table" in typed) != ("lm_max_ppl" in typed):
         ap.error("--lm-table and --lm-max-ppl must be given together")
-    if args.preset:
-        from final_ocr_spark.presets import PRESETS
-
-        if args.preset not in PRESETS:
-            ap.error(f"unknown --preset {args.preset!r}; "
-                     f"available: {sorted(PRESETS)}")
 
     from final_ocr_spark.session import get_spark
 
@@ -263,109 +266,31 @@ def main() -> None:
     else:
         ap.error("one of --input / --warc-input / --synthetic is required")
 
-    blocked = None
-    if args.blocked_domains:
-        blocked = [
-            ln.strip() for ln in
-            pathlib.Path(args.blocked_domains).read_text().splitlines()
-            if ln.strip()
-        ]
-
     from final_ocr_spark.operators.urlfilter import DEFAULT_URL_PATTERNS
     from final_ocr_spark.pipeline import corpus_pipeline
+    from jobs._cli import read_lines
 
-    # (CLI dest, pipeline kwarg, value thunk) — thunks defer parquet reads
-    # and file loads until the kwarg is actually selected.
-    cli_kwargs = [
-        ("blocked_domains", "blocked_domains", lambda: blocked),
-        ("url_patterns", "url_patterns",
-         lambda: DEFAULT_URL_PATTERNS if args.url_patterns else ()),
-        ("host_boilerplate", "host_boilerplate_ratio",
-         lambda: args.host_boilerplate),
-        ("paragraph_dedup", "paragraph_dedup_min_chars",
-         lambda: args.paragraph_dedup),
-        ("sentence_dedup", "sentence_dedup_min_chars",
-         lambda: args.sentence_dedup),
-        ("mime_gate", "mime_gate", lambda: args.mime_gate),
-        ("fix_mojibake", "fix_mojibake", lambda: args.fix_mojibake),
-        ("span_dedup", "span_dedup_gram_n", lambda: args.span_dedup),
-        ("min_quality", "min_quality", lambda: args.min_quality),
-        ("gopher", "gopher", lambda: args.gopher),
-        ("redact", "redact", lambda: args.redact),
-        ("near_dup", "near_dup", lambda: args.near_dup),
-        ("neardup_keep_best", "neardup_keep_best",
-         lambda: args.neardup_keep_best),
-        ("jaccard", "jaccard_threshold", lambda: args.jaccard),
-        ("host_cap", "host_cap", lambda: args.host_cap),
-        ("sample_rate", "sample_rate", lambda: args.sample_rate),
-        ("sample_salt", "sample_salt", lambda: args.sample_salt),
-        ("temperature_alpha", "temperature_alpha",
-         lambda: args.temperature_alpha),
-        ("temperature_group", "temperature_group",
-         lambda: args.temperature_group),
-        ("partitions", "extract_partitions", lambda: args.partitions),
-        ("cluster_algorithm", "cluster_algorithm",
-         lambda: args.cluster_algorithm),
-        ("containment", "containment_threshold", lambda: args.containment),
-        ("classifier_weights", "classifier_weights",
-         lambda: (spark.read.parquet(args.classifier_weights)
-                  if args.classifier_weights else None)),
-        ("classifier_threshold", "classifier_threshold",
-         lambda: args.classifier_threshold),
-        ("classifier_features", "classifier_n_features",
-         lambda: args.classifier_features),
-        ("lm_table", "lm_table",
-         lambda: (spark.read.parquet(args.lm_table)
-                  if args.lm_table else None)),
-        ("lm_max_ppl", "lm_max_ppl", lambda: args.lm_max_ppl),
-        ("drop_noindex", "drop_noindex", lambda: args.drop_noindex),
-        ("respect_canonical", "respect_canonical",
-         lambda: args.respect_canonical),
-        ("robots", "robots",
-         lambda: (spark.read.parquet(args.robots)
-                  if args.robots else None)),
-        ("robots_agent", "robots_agent", lambda: args.robots_agent),
-        ("semantic_threshold", "semantic_threshold",
-         lambda: args.semantic_threshold),
-        ("semantic_method", "semantic_method",
-         lambda: args.semantic_method),
-        ("semantic_k", "semantic_k", lambda: args.semantic_k),
-        ("prototype_prune", "prototype_prune_frac",
-         lambda: args.prototype_prune),
-        ("prototype_k", "prototype_k", lambda: args.prototype_k),
-        ("semantic_cluster_size", "semantic_cluster_size",
-         lambda: args.semantic_cluster_size),
-        ("lang_allow", "lang_allow",
-         lambda: (tuple(s.strip() for s in args.lang_allow.split(",")
-                        if s.strip())
-                  if args.lang_allow else None)),
-        ("lang_detect", "lang_detect", lambda: args.lang_detect),
-        ("c4_line_clean", "c4_line_clean", lambda: args.c4_line_clean),
-        ("c4_min_lines", "c4_min_lines", lambda: args.c4_min_lines),
-        ("flagged_wordlist", "flagged_wordlist",
-         lambda: ([ln.strip() for ln in
-                   pathlib.Path(args.flagged_wordlist)
-                   .read_text().splitlines() if ln.strip()]
-                  if args.flagged_wordlist else None)),
-        ("flagged_max_ratio", "flagged_max_ratio",
-         lambda: args.flagged_max_ratio),
-        ("compression_band", "compression_band",
-         lambda: args.compression_band),
-    ]
+    # the flags whose CLI value is not the kwarg value: files of words are
+    # read, parquet tables loaded, --url-patterns picks the pinned list
+    for kwarg in ("blocked_domains", "flagged_wordlist"):
+        if kwarg in typed:
+            typed[kwarg] = read_lines(typed[kwarg])
+    for kwarg in ("classifier_weights", "lm_table", "robots"):
+        if kwarg in typed:
+            typed[kwarg] = spark.read.parquet(typed[kwarg])
+    if "url_patterns" in typed:
+        typed["url_patterns"] = (
+            DEFAULT_URL_PATTERNS if typed["url_patterns"] else ())
+
+    kwargs = typed
     if args.preset:
         from final_ocr_spark.presets import PRESETS, preset_kwargs
 
-        overrides = {
-            kwarg: thunk() for dest, kwarg, thunk in cli_kwargs
-            if dest in provided
-        }
-        kwargs = preset_kwargs(args.preset, **overrides)
+        kwargs = preset_kwargs(args.preset, **typed)
         print(f"preset {args.preset}: {PRESETS[args.preset]['cite']}")
         print(f"preset notes: {PRESETS[args.preset]['notes']}")
-        if overrides:
-            print(f"preset overrides from CLI: {sorted(overrides)}")
-    else:
-        kwargs = {kwarg: thunk() for _, kwarg, thunk in cli_kwargs}
+        if typed:
+            print(f"preset overrides from CLI: {sorted(typed)}")
 
     corpus = corpus_pipeline(pages, **kwargs)
     corpus.write.mode("overwrite").parquet(args.output)

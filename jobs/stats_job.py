@@ -59,12 +59,16 @@ def main() -> None:
                          "(attribution + overlap + cumulative remaining) "
                          "for the pipeline's scan-local quality gates, "
                          "computed in one pass")
-    ap.add_argument("--funnel-min-quality", type=float, default=50.0)
-    ap.add_argument("--funnel-wordlist", default=None, metavar="FILE",
+    # the --funnel-* options default to SUPPRESS, so an unset one is absent
+    # and gate_funnel's own default applies; dest = funnel_<kwarg>
+    ap.add_argument("--funnel-min-quality", type=float,
+                    default=argparse.SUPPRESS)
+    ap.add_argument("--funnel-wordlist", default=argparse.SUPPRESS,
+                    dest="funnel_flagged_wordlist", metavar="FILE",
                     help="one flagged token per line (wordlist gate row)")
-    from jobs._cli import band_type
+    from jobs._cli import band_type, read_lines
 
-    ap.add_argument("--funnel-compression-band", default=None,
+    ap.add_argument("--funnel-compression-band", default=argparse.SUPPRESS,
                     metavar="LO:HI", type=band_type)
     ap.add_argument("--partitions", type=int, default=None)
     ap.add_argument("--seed", type=int, default=42)
@@ -127,18 +131,11 @@ def main() -> None:
     if args.funnel:
         from final_ocr_spark.plans.funnel import gate_funnel
 
-        band = args.funnel_compression_band  # validated at parse time
-        wordlist = ([ln.strip() for ln in
-                     pathlib.Path(args.funnel_wordlist)
-                     .read_text().splitlines() if ln.strip()]
-                    if args.funnel_wordlist else None)
-        funnel = gate_funnel(
-            docs, text_col=args.text_col,
-            min_quality=args.funnel_min_quality,
-            gopher=True,
-            flagged_wordlist=wordlist,
-            compression_band=band,
-        )
+        opts = {dest.removeprefix("funnel_"): v
+                for dest, v in vars(args).items() if dest.startswith("funnel_")}
+        if "flagged_wordlist" in opts:
+            opts["flagged_wordlist"] = read_lines(opts["flagged_wordlist"])
+        funnel = gate_funnel(docs, text_col=args.text_col, **opts)
         funnel.coalesce(1).write.mode("overwrite").parquet(str(out / "funnel"))
         for r in funnel.collect():
             print(f"funnel: {r['gate']:<12} failed_any={r['n_failed_any']:<8} "

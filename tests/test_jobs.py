@@ -352,7 +352,59 @@ def test_corpus_job_unknown_preset_fails_fast():
         capture_output=True, text=True, cwd="/root/repo", timeout=120,
     )
     assert out.returncode == 2
-    assert "unknown --preset" in out.stderr
+    assert "argument --preset: invalid choice: 'nope'" in out.stderr
+
+
+# corpus_job's own flags; every other dest must be a corpus_pipeline kwarg
+_CORPUS_JOB_FLAGS = {
+    "help", "preset", "input", "synthetic", "output", "seed", "warc_input",
+    "tables_output", "tables_min_rows", "tables_min_cols", "wet_output",
+    "wat_output", "jsonl_output", "jsonl_shards",
+}
+
+
+def test_corpus_job_parser_passes_only_typed_pipeline_flags(monkeypatch):
+    """In-process parser contract (no subprocess, no Spark): pipeline flags
+    carry no defaults, so an untyped flag never reaches corpus_pipeline and
+    its signature (or the preset) decides; typed flags arrive under their
+    kwarg names; an empty --lang-allow is a parse error."""
+    import argparse
+    import importlib
+    import inspect
+    import os
+    import sys
+
+    import pytest
+
+    from final_ocr_spark.pipeline import corpus_pipeline
+
+    # importing the job prepends the repo to sys.path and PYTHONPATH
+    monkeypatch.setattr(sys, "path", list(sys.path))
+    monkeypatch.setenv("PYTHONPATH", os.environ.get("PYTHONPATH", ""))
+    corpus_job = importlib.import_module("jobs.corpus_job")
+
+    ap = corpus_job._build_parser()
+    params = set(inspect.signature(corpus_pipeline).parameters)
+    dests = {a.dest for a in ap._actions}
+    assert _CORPUS_JOB_FLAGS <= dests
+    assert dests - _CORPUS_JOB_FLAGS <= params, dests - _CORPUS_JOB_FLAGS - params
+    for a in ap._actions:
+        if a.dest not in _CORPUS_JOB_FLAGS:
+            assert a.default is argparse.SUPPRESS, a.dest
+
+    def flags(*argv):
+        return corpus_job._pipeline_flags(ap.parse_args(list(argv)))
+
+    assert flags("--output", "x", "--synthetic", "5") == {}
+    assert flags("--output", "x", "--jaccard", "0.8", "--no-near-dup",
+                 "--partitions", "4") == {
+        "jaccard_threshold": 0.8, "near_dup": False, "extract_partitions": 4}
+    assert flags("--output", "x", "--lang-allow", " en, fr") == {
+        "lang_allow": ("en", "fr")}
+    for empty in (",", ""):
+        with pytest.raises(SystemExit) as exc:
+            ap.parse_args(["--output", "x", "--lang-allow", empty])
+        assert exc.value.code == 2
 
 
 def test_pack_job_smoke(tmp_path):
