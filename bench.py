@@ -229,54 +229,6 @@ def main() -> None:
         n = fn(spark)
         queries_extra[name] = {"sec": round(time.monotonic() - t0, 3), "rows": n}
 
-    # attach the committed two-cluster-size scaling evidence (produced by
-    # BENCH/scaling.py + extend_sessions.py; full protocol + raw timings in
-    # BENCH/BASELINE.md) so the per-round bench record carries the north
-    # rule's N->4N numbers alongside the suite timings
-    scaling = None
-    summary_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                                "BENCH", "scaling_summary.json")
-    if os.path.exists(summary_path):
-        with open(summary_path) as fh:
-            s = json.load(fh)
-        scaling = {
-            "docs_per_sec_8c": s["local8"]["docs_per_sec"],
-            "docs_per_sec_32c": s["local32"]["docs_per_sec"],
-            "efficiency_best_run": s["scaling_efficiency"],
-            "efficiency_median_of_session_bests": s["scaling_efficiency_median_est"],
-            "pass": s["pass"] and s.get("pass_median_est", True),
-            "n_sessions_per_level": s.get("n_sessions_per_level"),
-            "corpus_docs": s["n_docs"],
-        }
-
-    # round-5 release-artifact evidence: corpus_job --preset fineweb run
-    # end-to-end at the 480k-doc scaling corpus size (committed summary —
-    # protocol + raw numbers in BENCH/PRESET.md)
-    preset_480k = None
-    preset_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                               "BENCH", "preset_fineweb_summary.json")
-    if os.path.exists(preset_path):
-        with open(preset_path) as fh:
-            preset_480k = json.load(fh)
-
-    # round-4 large-size supplement (480k docs, 4 sessions/level): committed
-    # by BENCH/extend_sessions.py under SCALING_OUT_MD — see BENCH/SF1.md
-    scaling_480k = None
-    sf1_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                            "BENCH", "scaling_sf1_summary.json")
-    if os.path.exists(sf1_path):
-        with open(sf1_path) as fh:
-            s = json.load(fh)
-        scaling_480k = {
-            "corpus_docs": s["n_docs"],
-            "docs_per_sec_8c": s["local8"]["docs_per_sec"],
-            "docs_per_sec_32c": s["local32"]["docs_per_sec"],
-            "efficiency_best_run": s["scaling_efficiency"],
-            "efficiency_median_of_session_bests": s["scaling_efficiency_median_est"],
-            "pass": s["pass"] and s.get("pass_median_est", True),
-            "n_sessions_per_level": s.get("n_sessions_per_level"),
-        }
-
     total = round(sum(timings.values()), 3)
     # headline docs/s from the scan-based form — the BASELINE.json metric is
     # extraction over a stored table, not over an inline python generator
@@ -298,9 +250,6 @@ def main() -> None:
                 "rows": rows,
                 "queries_extra": queries_extra,
                 "udf_batch_latency_ms": percentiles(lat_acc.value),
-                "scaling": scaling,
-                "scaling_480k": scaling_480k,
-                "preset_fineweb_480k": preset_480k,
             }
         )
     )

@@ -26,13 +26,6 @@ import os
 import pathlib
 import sys
 
-_REPO = str(pathlib.Path(__file__).resolve().parent.parent)
-sys.path.insert(0, _REPO)
-# the driver's sys.path does NOT reach executor Python workers; PYTHONPATH
-# does (inherited by the worker processes Spark forks). Without it the job
-# only works when launched from the repo root or with --py-files.
-os.environ["PYTHONPATH"] = _REPO + os.pathsep + os.environ.get("PYTHONPATH", "")
-
 
 def _build_parser() -> argparse.ArgumentParser:
     from final_ocr_spark.presets import PRESETS
@@ -221,12 +214,14 @@ def _pipeline_flags(args: argparse.Namespace) -> dict:
     return {k: v for k, v in vars(args).items() if k in params}
 
 
-def main() -> None:
+def main(argv: list[str] | None = None) -> None:
     ap = _build_parser()
-    args = ap.parse_args()
+    args = ap.parse_args(argv)
     typed = _pipeline_flags(args)
     if ("lm_table" in typed) != ("lm_max_ppl" in typed):
         ap.error("--lm-table and --lm-max-ppl must be given together")
+    if not (args.synthetic or args.warc_input or args.input):
+        ap.error("one of --input / --warc-input / --synthetic is required")
 
     from final_ocr_spark.session import get_spark
 
@@ -259,12 +254,10 @@ def main() -> None:
                 f"excluded from the corpus — recorded at {qdir}"
             )
         pages = parsed.filter("error is null").drop("error")
-    elif args.input:
+    else:
         from final_ocr_spark.schema import PAGES_SCHEMA
 
         pages = spark.read.schema(PAGES_SCHEMA).parquet(args.input)
-    else:
-        ap.error("one of --input / --warc-input / --synthetic is required")
 
     from final_ocr_spark.operators.urlfilter import DEFAULT_URL_PATTERNS
     from final_ocr_spark.pipeline import corpus_pipeline
@@ -332,8 +325,16 @@ def main() -> None:
         recs = sum(m["records"] for m in manifest)
         print(f"wat written: {args.wat_output} records={recs} "
               f"files={sum(1 for m in manifest if m['file'])}")
-    spark.stop()
 
 
 if __name__ == "__main__":
+    # run as a script or by spark-submit: the repo on sys.path lets the
+    # driver import the package, and on PYTHONPATH the Python workers
+    # Spark forks (with --py-files the zip provides it instead)
+    _REPO = str(pathlib.Path(__file__).resolve().parent.parent)
+    sys.path.insert(0, _REPO)
+    os.environ["PYTHONPATH"] = _REPO + os.pathsep + os.environ.get("PYTHONPATH", "")
     main()
+    from pyspark.sql import SparkSession
+
+    SparkSession.getActiveSession().stop()

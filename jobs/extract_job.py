@@ -20,17 +20,8 @@ import os
 import pathlib
 import sys
 
-# allow running directly (python jobs/extract_job.py) in addition to
-# spark-submit --py-files; on a cluster the zip provides the package
-_REPO = str(pathlib.Path(__file__).resolve().parent.parent)
-sys.path.insert(0, _REPO)
-# the driver's sys.path does NOT reach executor Python workers; PYTHONPATH
-# does (inherited by the worker processes Spark forks). Without it the job
-# only works when launched from the repo root or with --py-files.
-os.environ["PYTHONPATH"] = _REPO + os.pathsep + os.environ.get("PYTHONPATH", "")
 
-
-def main() -> None:
+def main(argv: list[str] | None = None) -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", help="pages parquet/table path")
     ap.add_argument("--synthetic", type=int, default=0,
@@ -48,7 +39,9 @@ def main() -> None:
     ap.add_argument("--no-resume", action="store_true",
                     help="single atomic write, no manifest checkpointing")
     ap.add_argument("--seed", type=int, default=42)
-    args = ap.parse_args()
+    args = ap.parse_args(argv)
+    if not (args.synthetic or args.input):
+        ap.error("one of --input / --synthetic is required")
 
     from final_ocr_spark.session import get_spark
 
@@ -65,12 +58,10 @@ def main() -> None:
         from final_ocr_spark.sources.synthetic_pages import gen_pages
 
         pages = gen_pages(spark, args.synthetic, seed=args.seed)
-    elif args.input and catalog:
+    elif catalog:
         pages = catalog.read(spark, args.input)
-    elif args.input:
-        pages = spark.read.parquet(args.input)
     else:
-        ap.error("one of --input / --synthetic is required")
+        pages = spark.read.parquet(args.input)
 
     if args.no_resume:
         from final_ocr_spark.operators.extract_pages import extract_pages
@@ -102,8 +93,16 @@ def main() -> None:
             out, dest = done, args.output
 
     print(f"extracted rows: {out.count()} -> {dest}")
-    spark.stop()
 
 
 if __name__ == "__main__":
+    # run as a script or by spark-submit: the repo on sys.path lets the
+    # driver import the package, and on PYTHONPATH the Python workers
+    # Spark forks (with --py-files the zip provides it instead)
+    _REPO = str(pathlib.Path(__file__).resolve().parent.parent)
+    sys.path.insert(0, _REPO)
+    os.environ["PYTHONPATH"] = _REPO + os.pathsep + os.environ.get("PYTHONPATH", "")
     main()
+    from pyspark.sql import SparkSession
+
+    SparkSession.getActiveSession().stop()

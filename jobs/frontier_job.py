@@ -32,12 +32,8 @@ import os
 import pathlib
 import sys
 
-_REPO = str(pathlib.Path(__file__).resolve().parent.parent)
-sys.path.insert(0, _REPO)
-os.environ["PYTHONPATH"] = _REPO + os.pathsep + os.environ.get("PYTHONPATH", "")
 
-
-def main() -> None:
+def main(argv: list[str] | None = None) -> None:
     ap = argparse.ArgumentParser()
     src = ap.add_mutually_exclusive_group(required=True)
     src.add_argument("--candidates", help="parquet of candidate urls (url, ...)")
@@ -65,7 +61,7 @@ def main() -> None:
     ap.add_argument("--per-host-per-wave", type=int, default=1)
     ap.add_argument("--wave-seconds", type=float, default=1.0)
     ap.add_argument("--output", required=True)
-    args = ap.parse_args()
+    args = ap.parse_args(argv)
 
     from final_ocr_spark.operators.frontier import build_frontier
     from final_ocr_spark.session import get_spark
@@ -126,8 +122,16 @@ def main() -> None:
     frontier.write.mode("overwrite").parquet(args.output)
     n = spark.read.parquet(args.output).count()
     print(f"frontier: {n} urls -> {args.output}")
-    spark.stop()
 
 
 if __name__ == "__main__":
+    # run as a script or by spark-submit: the repo on sys.path lets the
+    # driver import the package, and on PYTHONPATH the Python workers
+    # Spark forks (with --py-files the zip provides it instead)
+    _REPO = str(pathlib.Path(__file__).resolve().parent.parent)
+    sys.path.insert(0, _REPO)
+    os.environ["PYTHONPATH"] = _REPO + os.pathsep + os.environ.get("PYTHONPATH", "")
     main()
+    from pyspark.sql import SparkSession
+
+    SparkSession.getActiveSession().stop()

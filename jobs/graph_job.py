@@ -26,15 +26,8 @@ import os
 import pathlib
 import sys
 
-_REPO = str(pathlib.Path(__file__).resolve().parent.parent)
-sys.path.insert(0, _REPO)
-# the driver's sys.path does NOT reach executor Python workers; PYTHONPATH
-# does (inherited by the worker processes Spark forks). Without it the job
-# only works when launched from the repo root or with --py-files.
-os.environ["PYTHONPATH"] = _REPO + os.pathsep + os.environ.get("PYTHONPATH", "")
 
-
-def main() -> None:
+def main(argv: list[str] | None = None) -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", help="pages parquet path (url, html, ...)")
     ap.add_argument("--synthetic", type=int, default=0,
@@ -49,7 +42,9 @@ def main() -> None:
     ap.add_argument("--partitions", type=int, default=None,
                     help="edge-table partitioning for the rank iterations")
     ap.add_argument("--seed", type=int, default=42)
-    args = ap.parse_args()
+    args = ap.parse_args(argv)
+    if not (args.synthetic or args.input):
+        ap.error("one of --input / --synthetic is required")
 
     from final_ocr_spark.session import get_spark
 
@@ -60,10 +55,8 @@ def main() -> None:
         from final_ocr_spark.sources.synthetic_pages import gen_pages
 
         pages = gen_pages(spark, args.synthetic, seed=args.seed)
-    elif args.input:
-        pages = spark.read.parquet(args.input)
     else:
-        ap.error("one of --input / --synthetic is required")
+        pages = spark.read.parquet(args.input)
 
     from final_ocr_spark.operators.links import (
         extract_outlinks,
@@ -100,4 +93,13 @@ def main() -> None:
 
 
 if __name__ == "__main__":
+    # run as a script or by spark-submit: the repo on sys.path lets the
+    # driver import the package, and on PYTHONPATH the Python workers
+    # Spark forks (with --py-files the zip provides it instead)
+    _REPO = str(pathlib.Path(__file__).resolve().parent.parent)
+    sys.path.insert(0, _REPO)
+    os.environ["PYTHONPATH"] = _REPO + os.pathsep + os.environ.get("PYTHONPATH", "")
     main()
+    from pyspark.sql import SparkSession
+
+    SparkSession.getActiveSession().stop()

@@ -30,15 +30,8 @@ import os
 import pathlib
 import sys
 
-_REPO = str(pathlib.Path(__file__).resolve().parent.parent)
-sys.path.insert(0, _REPO)
-# the driver's sys.path does NOT reach executor Python workers; PYTHONPATH
-# does (inherited by the worker processes Spark forks). Without it the job
-# only works when launched from the repo root or with --py-files.
-os.environ["PYTHONPATH"] = _REPO + os.pathsep + os.environ.get("PYTHONPATH", "")
 
-
-def main() -> None:
+def main(argv: list[str] | None = None) -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True,
                     help="directory new extracted-doc parquet files land in "
@@ -74,7 +67,7 @@ def main() -> None:
     ap.add_argument("--compact-min-partitions", type=int, default=16,
                     help="skip compaction below this many old partitions "
                          "(avoids write amplification on young stores)")
-    args = ap.parse_args()
+    args = ap.parse_args(argv)
     if args.warc:
         # --warc fixes the post-extraction shape: key is url, text column
         # is extracted_text, schema is the extractor's — reject silently-
@@ -167,8 +160,16 @@ def main() -> None:
         # the corpus directory — that is a successful no-op ingest
         n = 0
     print(f"corpus rows after ingest: {n} -> {args.corpus}")
-    spark.stop()
 
 
 if __name__ == "__main__":
+    # run as a script or by spark-submit: the repo on sys.path lets the
+    # driver import the package, and on PYTHONPATH the Python workers
+    # Spark forks (with --py-files the zip provides it instead)
+    _REPO = str(pathlib.Path(__file__).resolve().parent.parent)
+    sys.path.insert(0, _REPO)
+    os.environ["PYTHONPATH"] = _REPO + os.pathsep + os.environ.get("PYTHONPATH", "")
     main()
+    from pyspark.sql import SparkSession
+
+    SparkSession.getActiveSession().stop()

@@ -30,15 +30,8 @@ import os
 import pathlib
 import sys
 
-_REPO = str(pathlib.Path(__file__).resolve().parent.parent)
-sys.path.insert(0, _REPO)
-# the driver's sys.path does NOT reach executor Python workers; PYTHONPATH
-# does (inherited by the worker processes Spark forks). Without it the job
-# only works when launched from the repo root or with --py-files.
-os.environ["PYTHONPATH"] = _REPO + os.pathsep + os.environ.get("PYTHONPATH", "")
 
-
-def main() -> None:
+def main(argv: list[str] | None = None) -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", help="corpus parquet path (url, text, ...)")
     ap.add_argument("--synthetic", type=int, default=0,
@@ -78,7 +71,7 @@ def main() -> None:
                     default="uint16",
                     help="token width for --bin-output; ids that do not "
                          "fit fail the job loudly (no silent wraparound)")
-    args = ap.parse_args()
+    args = ap.parse_args(argv)
     if args.budget < 2:
         ap.error("--budget must be >= 2")
     if not args.synthetic and not args.input:
@@ -176,8 +169,16 @@ def main() -> None:
         print(f"bin shards written: {args.bin_output} chunks={tot} "
               f"dtype={args.bin_dtype} "
               f"files={sum(1 for m in rows if m['file'])}")
-    spark.stop()
 
 
 if __name__ == "__main__":
+    # run as a script or by spark-submit: the repo on sys.path lets the
+    # driver import the package, and on PYTHONPATH the Python workers
+    # Spark forks (with --py-files the zip provides it instead)
+    _REPO = str(pathlib.Path(__file__).resolve().parent.parent)
+    sys.path.insert(0, _REPO)
+    os.environ["PYTHONPATH"] = _REPO + os.pathsep + os.environ.get("PYTHONPATH", "")
     main()
+    from pyspark.sql import SparkSession
+
+    SparkSession.getActiveSession().stop()

@@ -29,15 +29,8 @@ import os
 import pathlib
 import sys
 
-_REPO = str(pathlib.Path(__file__).resolve().parent.parent)
-sys.path.insert(0, _REPO)
-# the driver's sys.path does NOT reach executor Python workers; PYTHONPATH
-# does (inherited by the worker processes Spark forks). Without it the job
-# only works when launched from the repo root or with --py-files.
-os.environ["PYTHONPATH"] = _REPO + os.pathsep + os.environ.get("PYTHONPATH", "")
 
-
-def main() -> None:
+def main(argv: list[str] | None = None) -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", help="corpus parquet path with (url|doc id, text, lang?)")
     ap.add_argument("--synthetic", type=int, default=0,
@@ -72,7 +65,9 @@ def main() -> None:
                     metavar="LO:HI", type=band_type)
     ap.add_argument("--partitions", type=int, default=None)
     ap.add_argument("--seed", type=int, default=42)
-    args = ap.parse_args()
+    args = ap.parse_args(argv)
+    if not (args.synthetic or args.input):
+        ap.error("one of --input / --synthetic is required")
 
     from pyspark.sql import functions as F
 
@@ -90,12 +85,10 @@ def main() -> None:
         docs = ext.filter(F.col("error").isNull()).select(
             "url", F.col("extracted_text").alias(args.text_col), "lang")
         args.key_col = "url"
-    elif args.input:
+    else:
         docs = spark.read.parquet(args.input)
         if args.partitions:
             docs = docs.repartition(args.partitions)
-    else:
-        ap.error("one of --input / --synthetic is required")
 
     from final_ocr_spark.operators.dedup import sketch_words
     from final_ocr_spark.operators.sketches import cms_build, heavy_hitters
@@ -167,8 +160,16 @@ def main() -> None:
             ("tfidf",) if args.tfidf_k else ()):
         n = spark.read.parquet(str(out / name)).count()
         print(f"stats written: {out / name} rows={n}")
-    spark.stop()
 
 
 if __name__ == "__main__":
+    # run as a script or by spark-submit: the repo on sys.path lets the
+    # driver import the package, and on PYTHONPATH the Python workers
+    # Spark forks (with --py-files the zip provides it instead)
+    _REPO = str(pathlib.Path(__file__).resolve().parent.parent)
+    sys.path.insert(0, _REPO)
+    os.environ["PYTHONPATH"] = _REPO + os.pathsep + os.environ.get("PYTHONPATH", "")
     main()
+    from pyspark.sql import SparkSession
+
+    SparkSession.getActiveSession().stop()

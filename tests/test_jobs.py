@@ -1,24 +1,93 @@
-"""spark-submit job entry points (subprocess smoke tests)."""
+"""The spark-submit job entry points (``jobs/*_job.py``).
 
-def test_stats_job_smoke(tmp_path):
-    import subprocess
-    import sys
+Each job is a plain ``main(argv)``: the smoke tests call it in-process on
+the shared session fixture and check its printed lines and outputs. Two
+tests keep a process boundary: ``test_spark_submit_py_files_packaging``
+runs the real ``spark-submit --py-files`` path, and
+``test_corpus_job_unknown_preset_fails_fast`` runs ``python
+jobs/corpus_job.py`` as a script. A job run here must fail, if at all, at
+argparse: a failed query can disable the session's Observation listener
+for every later test (PLANS.md Catalyst pitfall 8).
+"""
 
-    out = subprocess.run(
-        [sys.executable, "jobs/stats_job.py", "--synthetic", "150",
-         "--output", str(tmp_path / "stats"), "--tfidf-k", "2",
-         "--top-k", "5", "--counters", "500"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=420,
+import importlib
+import os
+import sys
+
+import pytest
+
+from jobs.package import REPO
+
+_JOBS = ["corpus_job", "extract_job", "frontier_job", "graph_job",
+         "ingest_job", "pack_job", "stats_job"]
+
+
+def _main(job):
+    return importlib.import_module(f"jobs.{job}").main
+
+
+@pytest.fixture
+def run_job(spark, capsys):
+    """``run_job(job, *argv)`` runs ``jobs/<job>.py``'s ``main`` on the
+    shared session and returns what it printed. ``get_spark`` re-applies the
+    job's runtime confs to the live session (32 shuffle partitions) and the
+    job sets log level WARN; both are restored after the run."""
+    root_logger = spark._jvm.org.apache.logging.log4j.LogManager.getRootLogger()
+
+    def run(job, *argv):
+        partitions = spark.conf.get("spark.sql.shuffle.partitions")
+        level = root_logger.getLevel().name()
+        capsys.readouterr()
+        try:
+            _main(job)(list(argv))
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", partitions)
+            spark.sparkContext.setLogLevel(level)
+        return capsys.readouterr().out
+
+    return run
+
+
+@pytest.mark.parametrize("job", _JOBS)
+def test_job_import_leaves_path_and_env_unchanged(job, monkeypatch):
+    """Importing a job module runs no path setup: that belongs to a script
+    run (``if __name__ == "__main__"``), not to an import."""
+    monkeypatch.delitem(sys.modules, f"jobs.{job}", raising=False)
+    path, pythonpath = list(sys.path), os.environ.get("PYTHONPATH")
+    importlib.import_module(f"jobs.{job}")
+    assert sys.path == path
+    assert os.environ.get("PYTHONPATH") == pythonpath
+
+
+@pytest.mark.parametrize("job", ["corpus_job", "extract_job", "graph_job",
+                                 "stats_job"])
+def test_job_without_input_exits_before_spark(job, tmp_path, monkeypatch,
+                                              capsys):
+    """A job given no input source is an argparse error, raised before any
+    Spark session is asked for."""
+    import final_ocr_spark.session
+
+    def no_session(*args, **kwargs):
+        raise AssertionError("get_spark called before the input check")
+
+    monkeypatch.setattr(final_ocr_spark.session, "get_spark", no_session)
+    with pytest.raises(SystemExit) as exc:
+        _main(job)(["--output", str(tmp_path / "out")])
+    assert exc.value.code == 2
+    assert "one of --input" in capsys.readouterr().err
+
+
+def test_stats_job_smoke(tmp_path, run_job):
+    out = run_job(
+        "stats_job", "--synthetic", "150",
+        "--output", str(tmp_path / "stats"), "--tfidf-k", "2",
+        "--top-k", "5", "--counters", "500",
     )
-    assert out.returncode == 0, out.stderr[-1500:]
-    lines = [ln for ln in out.stdout.splitlines() if ln.startswith("stats written")]
+    lines = [ln for ln in out.splitlines() if ln.startswith("stats written")]
     assert len(lines) == 5 and all("rows=" in ln for ln in lines)
 
 
-def test_corpus_job_warc_and_new_stages_smoke(tmp_path):
-    import subprocess
-    import sys
-
+def test_corpus_job_warc_and_new_stages_smoke(tmp_path, run_job):
     from final_ocr_spark.sources.warc import write_warc_bytes
 
     body_a = ("<html><body><p>this website uses cookies to improve your "
@@ -42,17 +111,15 @@ def test_corpus_job_warc_and_new_stages_smoke(tmp_path):
     ]))
     (tmp_path / "blocked.txt").write_text("bad.example\n")
 
-    out = subprocess.run(
-        [sys.executable, "jobs/corpus_job.py",
-         "--warc-input", str(warcdir),
-         "--output", str(tmp_path / "corpus"),
-         "--blocked-domains", str(tmp_path / "blocked.txt"),
-         "--url-patterns", "--paragraph-dedup", "30",
-         "--wet-output", str(tmp_path / "wet"),
-         "--min-quality", "0", "--no-gopher", "--no-near-dup"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=420,
+    out = run_job(
+        "corpus_job",
+        "--warc-input", str(warcdir),
+        "--output", str(tmp_path / "corpus"),
+        "--blocked-domains", str(tmp_path / "blocked.txt"),
+        "--url-patterns", "--paragraph-dedup", "30",
+        "--wet-output", str(tmp_path / "wet"),
+        "--min-quality", "0", "--no-gopher", "--no-near-dup",
     )
-    assert out.returncode == 0, out.stderr[-1500:]
 
     import duckdb
 
@@ -67,7 +134,7 @@ def test_corpus_job_warc_and_new_stages_smoke(tmp_path):
     assert "cookies" not in texts["http://b.example/2"]
     assert "mountain trail" in texts["http://b.example/2"]
     # --wet-output: the corpus round-trips through WET conversion records
-    assert "wet written" in out.stdout and (tmp_path / "wet" / "_SUCCESS").exists()
+    assert "wet written" in out and (tmp_path / "wet" / "_SUCCESS").exists()
 
 
 def test_spark_submit_py_files_packaging(tmp_path):
@@ -76,15 +143,12 @@ def test_spark_submit_py_files_packaging(tmp_path):
     the actual ``spark-submit --py-files`` binary FROM A DIRECTORY OUTSIDE
     THE REPO with a repo-free PYTHONPATH — the package can only resolve from
     the shipped zip, exactly as on a cluster."""
-    import os
     import shutil
     import subprocess
 
     from jobs.package import build
 
     zip_path = build(tmp_path / "final_ocr_spark.zip")
-    from jobs.package import REPO
-
     job = shutil.copy(REPO / "jobs" / "extract_job.py", tmp_path / "extract_job.py")
 
     spark_submit = shutil.which("spark-submit")
@@ -115,10 +179,7 @@ def test_spark_submit_py_files_packaging(tmp_path):
     assert {"url", "extracted_text"} <= cols
 
 
-def test_ingest_job_smoke(tmp_path):
-    import subprocess
-    import sys
-
+def test_ingest_job_smoke(tmp_path, run_job):
     import pandas as pd
 
     drops = tmp_path / "drops"
@@ -137,17 +198,15 @@ def test_ingest_job_smoke(tmp_path):
         columns=["url", "text"],
     ).to_parquet(drops / "d1.parquet")
 
-    out = subprocess.run(
-        [sys.executable, "jobs/ingest_job.py",
-         "--input", str(drops), "--corpus", str(tmp_path / "corpus"),
-         "--sigs", str(tmp_path / "sigs"),
-         "--checkpoint", str(tmp_path / "ckpt"),
-         "--schema", "url string, text string",
-         "--key", "url", "--text-col", "text", "--jaccard", "0.7"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=420,
+    out = run_job(
+        "ingest_job",
+        "--input", str(drops), "--corpus", str(tmp_path / "corpus"),
+        "--sigs", str(tmp_path / "sigs"),
+        "--checkpoint", str(tmp_path / "ckpt"),
+        "--schema", "url string, text string",
+        "--key", "url", "--text-col", "text", "--jaccard", "0.7",
     )
-    assert out.returncode == 0, out.stderr[-1500:]
-    assert "corpus rows after ingest: 2" in out.stdout
+    assert "corpus rows after ingest: 2" in out
 
     import duckdb
 
@@ -157,10 +216,7 @@ def test_ingest_job_smoke(tmp_path):
     assert urls == {"http://x/a", "http://x/b"}
 
 
-def test_graph_job_smoke(tmp_path, spark):
-    import subprocess
-    import sys
-
+def test_graph_job_smoke(tmp_path, spark, run_job):
     # cross-host page slice written as parquet input (the synthetic corpus
     # is single-host per page batch, which exercises only the empty-graph
     # branch; this covers the ranked path)
@@ -176,21 +232,14 @@ def test_graph_job_smoke(tmp_path, spark):
     inp = str(tmp_path / "pages")
     pages.write.parquet(inp)
 
-    out = subprocess.run(
-        [sys.executable, "jobs/graph_job.py", "--input", inp,
-         "--output", str(tmp_path / "graph"), "--iterations", "5"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=420,
-    )
-    assert out.returncode == 0, out.stderr[-1500:]
-    assert "webgraph written" in out.stdout
-    assert "outlinks=4" in out.stdout
-    assert "host_pairs=4" in out.stdout and "ranked_hosts=3" in out.stdout
+    out = run_job("graph_job", "--input", inp,
+                  "--output", str(tmp_path / "graph"), "--iterations", "5")
+    assert "webgraph written" in out
+    assert "outlinks=4" in out
+    assert "host_pairs=4" in out and "ranked_hosts=3" in out
 
 
-def test_frontier_job_smoke(tmp_path, spark):
-    import subprocess
-    import sys
-
+def test_frontier_job_smoke(tmp_path, spark, run_job):
     # sitemap-bodies input path + robots + ranks: the full composition
     ns = 'xmlns="http://www.sitemaps.org/schemas/sitemap/0.9"'
     body = (
@@ -212,29 +261,25 @@ def test_frontier_job_smoke(tmp_path, spark):
         [("a.com", 0.9)], "id string, rank double"
     ).write.parquet(str(tmp_path / "ranks"))
 
-    out = subprocess.run(
-        [sys.executable, "jobs/frontier_job.py",
-         "--sitemaps", str(tmp_path / "sitemaps"),
-         "--robots", str(tmp_path / "robots"),
-         "--host-ranks", str(tmp_path / "ranks"),
-         "--per-host-cap", "4",
-         "--output", str(tmp_path / "frontier")],
-        capture_output=True, text=True, cwd="/root/repo", timeout=420,
+    out = run_job(
+        "frontier_job",
+        "--sitemaps", str(tmp_path / "sitemaps"),
+        "--robots", str(tmp_path / "robots"),
+        "--host-ranks", str(tmp_path / "ranks"),
+        "--per-host-cap", "4",
+        "--output", str(tmp_path / "frontier"),
     )
-    assert out.returncode == 0, out.stderr[-1500:]
-    assert "frontier: 4 urls" in out.stdout
+    assert "frontier: 4 urls" in out
     rows = spark.read.parquet(str(tmp_path / "frontier")).collect()
     assert len(rows) == 4
     assert all(r.host == "a.com" and r.priority == 0.9 for r in rows)
 
 
-def test_ingest_job_compact_store(tmp_path):
+def test_ingest_job_compact_store(tmp_path, run_job):
     """--compact-store: after draining multiple micro-batches, the
     maintenance pass bin-packs old batch_id partitions of sigs + corpus
     (sidecar coverage preserved — next run still reports the Bloom path)."""
     import pathlib
-    import subprocess
-    import sys
 
     import pandas as pd
 
@@ -251,7 +296,6 @@ def test_ingest_job_compact_store(tmp_path):
             .to_parquet(drops / f"d{i}.parquet")
 
     common = [
-        sys.executable, "jobs/ingest_job.py",
         "--input", str(drops), "--corpus", str(tmp_path / "corpus"),
         "--sigs", str(tmp_path / "sigs"),
         "--checkpoint", str(tmp_path / "ckpt"),
@@ -259,14 +303,11 @@ def test_ingest_job_compact_store(tmp_path):
         "--key", "url", "--text-col", "text", "--jaccard", "0.7",
         "--max-files-per-trigger", "1",  # one micro-batch per drop file
     ]
-    out = subprocess.run(
-        common + ["--compact-store", "--compact-min-partitions", "2"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=420,
-    )
-    assert out.returncode == 0, out.stderr[-1500:]
-    assert "corpus rows after ingest: 4" in out.stdout
-    assert "signature-store compaction: {'compacted': True" in out.stdout
-    assert "corpus compaction: {'compacted': True" in out.stdout
+    out = run_job("ingest_job", *common,
+                  "--compact-store", "--compact-min-partitions", "2")
+    assert "corpus rows after ingest: 4" in out
+    assert "signature-store compaction: {'compacted': True" in out
+    assert "corpus compaction: {'compacted': True" in out
 
     def parts(p):
         return sorted(
@@ -286,23 +327,18 @@ def test_ingest_job_compact_store(tmp_path):
     assert n == 4
 
 
-def test_corpus_job_kmeans_semantic_and_prune_flags(tmp_path):
+def test_corpus_job_kmeans_semantic_and_prune_flags(tmp_path, run_job):
     """--semantic-method kmeans + --prototype-prune drive the D4 stages
     through the spark-submit entry point end-to-end."""
-    import subprocess
-    import sys
-
-    out = subprocess.run(
-        [sys.executable, "jobs/corpus_job.py",
-         "--synthetic", "250",
-         "--output", str(tmp_path / "corpus"),
-         "--min-quality", "0", "--no-gopher", "--no-near-dup",
-         "--semantic-threshold", "0.95",
-         "--semantic-method", "kmeans", "--semantic-k", "6",
-         "--prototype-prune", "0.1", "--prototype-k", "6"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=420,
+    run_job(
+        "corpus_job",
+        "--synthetic", "250",
+        "--output", str(tmp_path / "corpus"),
+        "--min-quality", "0", "--no-gopher", "--no-near-dup",
+        "--semantic-threshold", "0.95",
+        "--semantic-method", "kmeans", "--semantic-k", "6",
+        "--prototype-prune", "0.1", "--prototype-k", "6",
     )
-    assert out.returncode == 0, out.stderr[-1500:]
 
     import duckdb
 
@@ -312,25 +348,20 @@ def test_corpus_job_kmeans_semantic_and_prune_flags(tmp_path):
     assert 0 < n <= 250
 
 
-def test_corpus_job_preset_with_cli_override(tmp_path):
+def test_corpus_job_preset_with_cli_override(tmp_path, run_job):
     """--preset gopher runs the published-recipe kwarg bundle through the
     job entry point, and an explicitly-typed flag (--no-near-dup, whose
     value CONTRADICTS the preset's near_dup=True) wins the merge — while
     untyped flags (e.g. --min-quality) keep the preset's values."""
-    import subprocess
-    import sys
-
-    out = subprocess.run(
-        [sys.executable, "jobs/corpus_job.py",
-         "--preset", "gopher",
-         "--synthetic", "250",
-         "--output", str(tmp_path / "corpus"),
-         "--no-near-dup"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=420,
+    out = run_job(
+        "corpus_job",
+        "--preset", "gopher",
+        "--synthetic", "250",
+        "--output", str(tmp_path / "corpus"),
+        "--no-near-dup",
     )
-    assert out.returncode == 0, out.stderr[-1500:]
-    assert "preset gopher: Rae et al. 2021" in out.stdout
-    assert "preset overrides from CLI: ['near_dup']" in out.stdout
+    assert "preset gopher: Rae et al. 2021" in out
+    assert "preset overrides from CLI: ['near_dup']" in out
 
     import duckdb
 
@@ -344,12 +375,11 @@ def test_corpus_job_unknown_preset_fails_fast():
     """An unknown --preset errors at argparse time, before any Spark
     session starts."""
     import subprocess
-    import sys
 
     out = subprocess.run(
-        [sys.executable, "jobs/corpus_job.py",
+        [sys.executable, str(REPO / "jobs" / "corpus_job.py"),
          "--preset", "nope", "--synthetic", "10", "--output", "/tmp/x"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=120,
+        capture_output=True, text=True, cwd=str(REPO), timeout=120,
     )
     assert out.returncode == 2
     assert "argument --preset: invalid choice: 'nope'" in out.stderr
@@ -363,25 +393,16 @@ _CORPUS_JOB_FLAGS = {
 }
 
 
-def test_corpus_job_parser_passes_only_typed_pipeline_flags(monkeypatch):
+def test_corpus_job_parser_passes_only_typed_pipeline_flags():
     """In-process parser contract (no subprocess, no Spark): pipeline flags
     carry no defaults, so an untyped flag never reaches corpus_pipeline and
     its signature (or the preset) decides; typed flags arrive under their
     kwarg names; an empty --lang-allow is a parse error."""
     import argparse
-    import importlib
     import inspect
-    import os
-    import sys
-
-    import pytest
 
     from final_ocr_spark.pipeline import corpus_pipeline
-
-    # importing the job prepends the repo to sys.path and PYTHONPATH
-    monkeypatch.setattr(sys, "path", list(sys.path))
-    monkeypatch.setenv("PYTHONPATH", os.environ.get("PYTHONPATH", ""))
-    corpus_job = importlib.import_module("jobs.corpus_job")
+    from jobs import corpus_job
 
     ap = corpus_job._build_parser()
     params = set(inspect.signature(corpus_pipeline).parameters)
@@ -407,20 +428,15 @@ def test_corpus_job_parser_passes_only_typed_pipeline_flags(monkeypatch):
         assert exc.value.code == 2
 
 
-def test_pack_job_smoke(tmp_path):
+def test_pack_job_smoke(tmp_path, run_job):
     """pack_job end-to-end: synthetic corpus → BPE train → packed chunks +
     vocab + merges parquet, all chunks exactly --budget long (--pad)."""
-    import subprocess
-    import sys
-
-    out = subprocess.run(
-        [sys.executable, "jobs/pack_job.py",
-         "--synthetic", "200", "--output", str(tmp_path / "packed"),
-         "--budget", "128", "--n-merges", "120", "--pad"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=420,
+    out = run_job(
+        "pack_job",
+        "--synthetic", "200", "--output", str(tmp_path / "packed"),
+        "--budget", "128", "--n-merges", "120", "--pad",
     )
-    assert out.returncode == 0, out.stderr[-1500:]
-    assert "chunks written" in out.stdout and "vocab written" in out.stdout
+    assert "chunks written" in out and "vocab written" in out
 
     import duckdb
 
@@ -440,23 +456,16 @@ def test_pack_job_smoke(tmp_path):
     assert 0 < n_merges <= 120
 
 
-def test_pack_job_shuffle_salt_reproducible(tmp_path):
+def test_pack_job_shuffle_salt_reproducible(tmp_path, run_job):
     """--shuffle-salt writes chunks in a salt-keyed pseudo-random order:
     two runs with the same salt produce the same file-order; the order
     differs from plain chunk_id order."""
-    import subprocess
-    import sys
-
     import pyarrow.parquet as pq
 
     def run(outdir, extra):
-        out = subprocess.run(
-            [sys.executable, "jobs/pack_job.py",
-             "--synthetic", "150", "--output", str(outdir),
-             "--budget", "64", "--n-merges", "80", *extra],
-            capture_output=True, text=True, cwd="/root/repo", timeout=420,
-        )
-        assert out.returncode == 0, out.stderr[-1500:]
+        run_job("pack_job",
+                "--synthetic", "150", "--output", str(outdir),
+                "--budget", "64", "--n-merges", "80", *extra)
         # ordinal part files read one at a time: pyarrow preserves the
         # written row order (a parallel SQL scan does not)
         cids = []
@@ -473,55 +482,39 @@ def test_pack_job_shuffle_salt_reproducible(tmp_path):
     assert a != c
 
 
-def test_pack_job_merges_reuse_no_self_overwrite(tmp_path):
+def test_pack_job_merges_reuse_no_self_overwrite(tmp_path, run_job):
     """Run 2 reuses run 1's merges via --merges-input pointing INTO run 1's
     own output — must not self-overwrite the path being read (review-caught)
     — and --synthetic honors a non-default --text-col."""
-    import subprocess
-    import sys
-
     import duckdb
 
     outdir = tmp_path / "packed"
-    base = [sys.executable, "jobs/pack_job.py", "--synthetic", "120",
-            "--budget", "64", "--n-merges", "60", "--text-col", "body"]
-    r1 = subprocess.run(
-        [*base, "--output", str(outdir)],
-        capture_output=True, text=True, cwd="/root/repo", timeout=420,
-    )
-    assert r1.returncode == 0, r1.stderr[-1500:]
+    base = ["--synthetic", "120", "--budget", "64", "--n-merges", "60",
+            "--text-col", "body"]
+    run_job("pack_job", *base, "--output", str(outdir))
     before = duckdb.sql(
         f"SELECT * FROM '{outdir}/merges/*.parquet' ORDER BY rank"
     ).fetchall()
-    r2 = subprocess.run(
-        [*base, "--output", str(outdir),
-         "--merges-input", str(outdir / "merges")],
-        capture_output=True, text=True, cwd="/root/repo", timeout=420,
-    )
-    assert r2.returncode == 0, r2.stderr[-1500:]
-    assert "merges reused from" in r2.stdout
+    out = run_job("pack_job", *base, "--output", str(outdir),
+                  "--merges-input", str(outdir / "merges"))
+    assert "merges reused from" in out
     after = duckdb.sql(
         f"SELECT * FROM '{outdir}/merges/*.parquet' ORDER BY rank"
     ).fetchall()
     assert after == before  # untouched, still readable
 
 
-def test_corpus_job_temperature_and_keep_best_flags(tmp_path):
+def test_corpus_job_temperature_and_keep_best_flags(tmp_path, run_job):
     """--temperature-alpha + --neardup-keep-best drive the new stage 8 and
     the quality-representative rule through the spark-submit entry."""
-    import subprocess
-    import sys
-
-    out = subprocess.run(
-        [sys.executable, "jobs/corpus_job.py",
-         "--synthetic", "300",
-         "--output", str(tmp_path / "corpus"),
-         "--min-quality", "0", "--no-gopher",
-         "--neardup-keep-best",
-         "--temperature-alpha", "0.3"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=420,
+    run_job(
+        "corpus_job",
+        "--synthetic", "300",
+        "--output", str(tmp_path / "corpus"),
+        "--min-quality", "0", "--no-gopher",
+        "--neardup-keep-best",
+        "--temperature-alpha", "0.3",
     )
-    assert out.returncode == 0, out.stderr[-1500:]
 
     import duckdb
 
@@ -534,22 +527,18 @@ def test_corpus_job_temperature_and_keep_best_flags(tmp_path):
     assert langs[0] >= 2
 
 
-def test_pack_job_bin_export(tmp_path):
+def test_pack_job_bin_export(tmp_path, run_job):
     """--bin-output exports memmap token shards whose bytes reproduce the
     parquet chunks exactly (uint16 little-endian, budget-length rows)."""
     import json
-    import subprocess
-    import sys
 
-    out = subprocess.run(
-        [sys.executable, "jobs/pack_job.py",
-         "--synthetic", "120", "--output", str(tmp_path / "packed"),
-         "--budget", "64", "--n-merges", "80", "--pad",
-         "--bin-output", str(tmp_path / "bin")],
-        capture_output=True, text=True, cwd="/root/repo", timeout=420,
+    out = run_job(
+        "pack_job",
+        "--synthetic", "120", "--output", str(tmp_path / "packed"),
+        "--budget", "64", "--n-merges", "80", "--pad",
+        "--bin-output", str(tmp_path / "bin"),
     )
-    assert out.returncode == 0, out.stderr[-1500:]
-    assert "bin shards written" in out.stdout
+    assert "bin shards written" in out
 
     import duckdb
     import numpy as np
@@ -567,24 +556,20 @@ def test_pack_job_bin_export(tmp_path):
     assert flat == [list(ids) for (ids,) in expected]
 
 
-def test_corpus_job_jsonl_export(tmp_path):
+def test_corpus_job_jsonl_export(tmp_path, run_job):
     """--jsonl-output writes gzip JSONL release shards that round-trip to
     the parquet corpus, with a checksummed manifest and _SUCCESS."""
     import gzip
     import hashlib
     import json
-    import subprocess
-    import sys
 
-    out = subprocess.run(
-        [sys.executable, "jobs/corpus_job.py",
-         "--synthetic", "150", "--output", str(tmp_path / "corpus"),
-         "--no-near-dup", "--min-quality", "0", "--no-gopher",
-         "--jsonl-output", str(tmp_path / "jsonl"), "--jsonl-shards", "2"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=420,
+    out = run_job(
+        "corpus_job",
+        "--synthetic", "150", "--output", str(tmp_path / "corpus"),
+        "--no-near-dup", "--min-quality", "0", "--no-gopher",
+        "--jsonl-output", str(tmp_path / "jsonl"), "--jsonl-shards", "2",
     )
-    assert out.returncode == 0, out.stderr[-1500:]
-    assert "jsonl shards written" in out.stdout
+    assert "jsonl shards written" in out
     assert (tmp_path / "jsonl" / "_SUCCESS").exists()
 
     import duckdb
@@ -604,53 +589,39 @@ def test_corpus_job_jsonl_export(tmp_path):
     assert len(urls) == n and urls == sorted(urls)
 
 
-def test_corpus_job_rejects_malformed_compression_band(tmp_path):
+def test_corpus_job_rejects_malformed_compression_band(tmp_path, capsys):
     """A band missing its HI bound must die as an argparse error naming the
     expected LO:HI form — before any Spark session exists."""
-    import subprocess
-    import sys
-
-    out = subprocess.run(
-        [sys.executable, "jobs/corpus_job.py", "--synthetic", "5",
-         "--output", str(tmp_path / "c"), "--compression-band", "0.7"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=120,
-    )
-    assert out.returncode == 2
-    assert "LO:HI" in out.stderr
+    with pytest.raises(SystemExit) as exc:
+        _main("corpus_job")(["--synthetic", "5",
+                             "--output", str(tmp_path / "c"),
+                             "--compression-band", "0.7"])
+    assert exc.value.code == 2
+    assert "LO:HI" in capsys.readouterr().err
 
 
-def test_stats_job_rejects_malformed_funnel_band(tmp_path):
+def test_stats_job_rejects_malformed_funnel_band(tmp_path, capsys):
     """stats_job validates --funnel-compression-band with the same shared
     argparse type as corpus_job: malformed input dies as an argparse error
     naming LO:HI before any Spark session exists."""
-    import subprocess
-    import sys
-
-    out = subprocess.run(
-        [sys.executable, "jobs/stats_job.py", "--synthetic", "5",
-         "--output", str(tmp_path / "s"), "--funnel",
-         "--funnel-compression-band", "nonsense"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=120,
-    )
-    assert out.returncode == 2
-    assert "LO:HI" in out.stderr
+    with pytest.raises(SystemExit) as exc:
+        _main("stats_job")(["--synthetic", "5",
+                            "--output", str(tmp_path / "s"), "--funnel",
+                            "--funnel-compression-band", "nonsense"])
+    assert exc.value.code == 2
+    assert "LO:HI" in capsys.readouterr().err
 
 
-def test_stats_job_funnel(tmp_path):
+def test_stats_job_funnel(tmp_path, run_job):
     """--funnel writes the per-gate retention table and prints one line per
     gate plus the kept row."""
-    import subprocess
-    import sys
-
-    out = subprocess.run(
-        [sys.executable, "jobs/stats_job.py", "--synthetic", "120",
-         "--output", str(tmp_path / "stats"), "--top-k", "5",
-         "--counters", "500", "--funnel", "--funnel-min-quality", "50",
-         "--funnel-compression-band", "0.05:0.95"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=420,
+    out = run_job(
+        "stats_job", "--synthetic", "120",
+        "--output", str(tmp_path / "stats"), "--top-k", "5",
+        "--counters", "500", "--funnel", "--funnel-min-quality", "50",
+        "--funnel-compression-band", "0.05:0.95",
     )
-    assert out.returncode == 0, out.stderr[-1500:]
-    lines = [ln for ln in out.stdout.splitlines() if ln.startswith("funnel:")]
+    lines = [ln for ln in out.splitlines() if ln.startswith("funnel:")]
     gates = [ln.split()[1] for ln in lines]
     assert gates == ["quality", "gopher", "compression", "kept"]
 
